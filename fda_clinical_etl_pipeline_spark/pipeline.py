@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,6 +61,19 @@ class Zones:
         return os.path.join(self.root, "provenance")
 
 
+def _listed_inputs(files_dir: str) -> list[str]:
+    """The files directly in ``files_dir`` that a Spark read of it takes,
+    as the file URIs ``input_file_name()`` reports: regular files whose
+    names do not start with ``.`` or ``_`` (Spark skips those as
+    hidden)."""
+    return [
+        Path(os.path.abspath(os.path.join(files_dir, name))).as_uri()
+        for name in sorted(os.listdir(files_dir))
+        if not name.startswith((".", "_"))
+        and os.path.isfile(os.path.join(files_dir, name))
+    ]
+
+
 class ClinicalPipeline:
     def __init__(self, spark: SparkSession, zones: Zones,
                  catalog: Catalog | None = None):
@@ -96,39 +111,35 @@ class ClinicalPipeline:
 
     # -- stage 2: validate (etl/validate.py:225-285) -------------------------
 
-    def _hl7_validation(self, df: DataFrame):
-        """P13: required-segment/field checks on the segments array —
-        one codegen expression, shared by the per-batch and bulk
-        paths (etl/validate.py:179-213 semantics)."""
+    @staticmethod
+    def _errors(source: SourceMeta, df: DataFrame, meta: list[dict]):
+        """The ``_errors`` array column of a batch. HL7 gets P13's
+        required-segment/field checks on the segments array
+        (etl/validate.py:179-213 semantics); the other formats get the
+        metadata checks, an always-empty array without metadata
+        (etl/validate.py:239-243). One codegen expression, shared by the
+        per-batch and bulk paths."""
+        if source.source_type != "hl7":
+            return validate_mod.errors_expr(df, meta)
         from pyspark.sql import functions as F
 
         from .functions import hl7 as hl7f
-        from .plans.validate import ValidationResult
 
-        annotated = df.withColumn(
-            "_errors",
-            F.filter(
-                F.array(
-                    F.when(~hl7f.has_segment(F.col("segments"), "PID"),
-                           F.lit("missing_segment:PID")),
-                    *[
-                        F.when(
-                            hl7f.nullif_empty(
-                                hl7f.pid_field(F.col("segments"), n)
-                            ).isNull(),
-                            F.lit(f"missing_field:PID-{n}"),
-                        )
-                        for n in (3, 5, 7)
-                    ],
-                ),
-                lambda x: x.isNotNull(),
+        return F.filter(
+            F.array(
+                F.when(~hl7f.has_segment(F.col("segments"), "PID"),
+                       F.lit("missing_segment:PID")),
+                *[
+                    F.when(
+                        hl7f.nullif_empty(
+                            hl7f.pid_field(F.col("segments"), n)
+                        ).isNull(),
+                        F.lit(f"missing_field:PID-{n}"),
+                    )
+                    for n in (3, 5, 7)
+                ],
             ),
-        )
-        return ValidationResult(
-            annotated=annotated,
-            valid=annotated.filter(F.size("_errors") == 0)
-            .drop("_errors"),
-            quarantine=annotated.filter(F.size("_errors") > 0),
+            lambda x: x.isNotNull(),
         )
 
     def validate_batch(self, source: SourceMeta, batch_id: str,
@@ -143,10 +154,9 @@ class ClinicalPipeline:
             self.prov.update_status(batch_id, "VALIDATED",
                                     total_rows=df.count())
             return df
-        if source.source_type == "hl7":
-            result = self._hl7_validation(df)
-        else:
-            result = validate_mod.validate(df, meta)
+        result = validate_mod.ValidationResult.split(
+            df.withColumn("_errors", self._errors(source, df, meta))
+        )
 
         n_total = df.count()
         n_bad = result.quarantine.count()
@@ -174,19 +184,7 @@ class ClinicalPipeline:
     def scrub_batch(self, source: SourceMeta, batch_id: str,
                     df: DataFrame) -> DataFrame:
         meta = self.catalog.schema_metadata(source.source_name)
-        if source.source_type == "hl7":
-            from .functions.scrub import redact_hl7_segments
-            from pyspark.sql import functions as F
-
-            # Column-level PID redaction from schema metadata (reference
-            # scrub_hl7, etl/scrub_phi.py:199-266) + regex chain on every
-            # other field/segment (quirk #7) — one codegen expression.
-            scrubbed = df.withColumn(
-                "segments",
-                redact_hl7_segments(F.col("segments"), meta),
-            ).withColumn("message", F.array_join("segments", "\n"))
-        else:
-            scrubbed = scrub_dataframe(df, meta, DEFAULT_PHI_RULES)
+        scrubbed = self._scrub(source, df, meta)
         curated_dir = os.path.join(self.zones.curated, source.source_name, batch_id)
         writers.write_parquet(scrubbed, curated_dir)
         digest = writers.row_hash_agg(scrubbed)
@@ -195,6 +193,23 @@ class ClinicalPipeline:
         self.prov.update_status(batch_id, "SCRUBBED", curated_sha256=digest)
         # quirk #1 fixed: downstream reads THIS frame, not the raw file
         return self.spark.read.parquet(curated_dir)
+
+    @staticmethod
+    def _scrub(source: SourceMeta, df: DataFrame,
+               meta: list[dict]) -> DataFrame:
+        if source.source_type == "hl7":
+            from pyspark.sql import functions as F
+
+            from .functions.scrub import redact_hl7_segments
+
+            # Column-level PID redaction from schema metadata (reference
+            # scrub_hl7, etl/scrub_phi.py:199-266) + regex chain on every
+            # other field/segment (quirk #7) — one codegen expression.
+            return df.withColumn(
+                "segments",
+                redact_hl7_segments(F.col("segments"), meta),
+            ).withColumn("message", F.array_join("segments", "\n"))
+        return scrub_dataframe(df, meta, DEFAULT_PHI_RULES)
 
     def _record_fired_rules(self, source: SourceMeta, batch_id: str,
                             pre_scrub: DataFrame) -> None:
@@ -293,18 +308,19 @@ class ClinicalPipeline:
 
     # -- stage 4: transform / canonicalize (etl/transform.py:159-215) --------
 
+    @staticmethod
+    def _canonicalize(source: SourceMeta, df: DataFrame) -> DataFrame:
+        if source.source_name == "hospital_a" or source.source_type == "csv":
+            return canonical.canonicalize_hospital_a(df)
+        if source.source_type == "jsonl":
+            return canonical.canonicalize_clinic_b(df)
+        return canonical.canonicalize_hl7(df)
+
     def transform_batch(self, source: SourceMeta, batch_id: str,
                         df: DataFrame) -> DataFrame:
         import time as _time
 
-        if source.source_name == "hospital_a" or (
-            source.source_type == "csv"
-        ):
-            out = canonical.canonicalize_hospital_a(df)
-        elif source.source_type == "jsonl":
-            out = canonical.canonicalize_clinic_b(df)
-        else:
-            out = canonical.canonicalize_hl7(df)
+        out = self._canonicalize(source, df)
         ts = _time.strftime("%Y%m%dT%H%M%S", _time.gmtime())
         path = writers.write_versioned_artifact(
             out, self.zones.qlm_ready, source.source_name, batch_id, ts
@@ -338,7 +354,17 @@ class ClinicalPipeline:
         in ONE plan. Per-file identity survives as ``_input_file``
         (SURVEY.md S2); validation/scrub/canonicalize run once over the
         union; per-file row counts come from one grouped aggregation; all
-        provenance rows land in a handful of appends.
+        provenance rows land in one append.
+
+        One scan per source (operator fusion): the validated frame is
+        ``persist()``-ed once, and the per-file stats, the quarantine
+        write and the versioned write all read that cache. The first of
+        them, the stats ``collect``, fills it. The cache is
+        ``unpersist()``-ed in a ``finally``, so it is released whether
+        the writes succeed or raise.
+
+        Every file in ``files_dir`` gets a COMPLETED batch row; a file
+        without rows (empty or header-only) has ``total_rows`` 0.
 
         Contrast run_batch/run_all (per-file sequential, ~20 Spark jobs
         per file — faithful to the reference's batch-per-file semantics
@@ -346,95 +372,68 @@ class ClinicalPipeline:
         Bulk amortizes the fixed costs across the whole directory; this is
         the mode a 1000-executor deployment runs.
         """
-        source = self.catalog.source(source_name)
-        from pyspark.sql import functions as F
-
-        glob_path = files_dir + "/*"
-        if source.source_type == "csv":
-            cols = [c.column_name for c in source.columns]
-            df = readers.read_csv_strings(self.spark, glob_path, cols)
-        elif source.source_type == "jsonl":
-            df = readers.read_jsonl(self.spark, glob_path)
-        elif source.source_type == "hl7":
-            df = readers.read_hl7(self.spark, glob_path)
-        else:
-            raise ValueError(
-                f"unknown source_type {source.source_type!r}"
-            )
-        meta = self.catalog.schema_metadata(source_name)
-
-        if source.source_type == "hl7":
-            result = self._hl7_validation(df)
-        elif not meta:
-            # no metadata ⇒ skip validation (etl/validate.py:239-243)
-            from .plans.validate import ValidationResult
-
-            annotated = df.withColumn(
-                "_errors", F.array().cast("array<string>")
-            )
-            result = ValidationResult(
-                annotated=annotated, valid=df,
-                quarantine=annotated.limit(0),
-            )
-        else:
-            result = validate_mod.validate(df, meta)
-        # one pass: per-file totals and violation counts
-        stats = (
-            result.annotated.groupBy("_input_file")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.size("_errors") > 0, 1).otherwise(0)).alias(
-                    "n_bad"
-                ),
-            )
-            .collect()
-        )
-        if result.quarantine.take(1):
-            writers.quarantine_write(
-                result.quarantine, self.zones.quarantine, source_name, "_bulk"
-            )
-        valid = result.valid
-        if source.source_type == "hl7":
-            from .functions.scrub import redact_hl7_segments
-
-            scrubbed = valid.drop("_input_file").withColumn(
-                "segments",
-                redact_hl7_segments(F.col("segments"), meta),
-            ).withColumn("message", F.array_join("segments", "\n"))
-            out = canonical.canonicalize_hl7(scrubbed)
-        else:
-            scrubbed = scrub_dataframe(valid.drop("_input_file"), meta,
-                                       DEFAULT_PHI_RULES)
-            out = canonical.canonicalize_hospital_a(scrubbed) if (
-                source_name == "hospital_a"
-                or source.source_type == "csv"
-            ) else canonical.canonicalize_clinic_b(scrubbed)
         import time as _time
 
-        ts = _time.strftime("%Y%m%dT%H%M%S", _time.gmtime())
-        path = writers.write_versioned_artifact(
-            out, self.zones.qlm_ready, source_name, "_bulk", ts
-        )
+        from pyspark.sql import functions as F
+
+        source = self.catalog.source(source_name)
+        # the directory, not a ``files_dir/*`` glob: past 32 globbed
+        # paths Spark lists them with a job of its own
+        df = self._read_batch(source, files_dir)
+        meta = self.catalog.schema_metadata(source_name)
+        annotated = df.withColumn(
+            "_errors", self._errors(source, df, meta)
+        ).persist()
+        try:
+            # per-file totals and violation counts; fills the cache
+            stats = (
+                annotated.groupBy("_input_file")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum(F.when(F.size("_errors") > 0, 1).otherwise(0))
+                    .alias("n_bad"),
+                )
+                .collect()
+            )
+            result = validate_mod.ValidationResult.split(annotated)
+            if sum(s["n_bad"] for s in stats) > 0:
+                writers.quarantine_write(
+                    result.quarantine, self.zones.quarantine, source_name,
+                    "_bulk",
+                )
+            scrubbed = self._scrub(
+                source, result.valid.drop("_input_file"), meta
+            )
+            ts = _time.strftime("%Y%m%dT%H%M%S", _time.gmtime())
+            path = writers.write_versioned_artifact(
+                self._canonicalize(source, scrubbed), self.zones.qlm_ready,
+                source_name, "_bulk", ts,
+            )
+        finally:
+            annotated.unpersist()
+        per_file = [
+            (s["_input_file"], int(s["n_rows"]), int(s["n_bad"]))
+            for s in stats
+        ]
+        seen = {unquote(os.path.basename(f)) for f, _, _ in per_file}
+        per_file += [
+            (uri, 0, 0) for uri in _listed_inputs(files_dir)
+            if unquote(os.path.basename(uri)) not in seen
+        ]
         # provenance: one batch row per input file, ALL files in a single
         # multi-row append (per-file appends are per-write jobs)
-        per_file = []
-        for s in stats:
-            fname = os.path.basename(s["_input_file"])
-            bid = make_batch_id(source_name, fname)
-            per_file.append(
-                (bid, s["_input_file"], int(s["n_rows"]), int(s["n_bad"]))
-            )
         self.prov.register_batches_bulk(
             [
-                (bid, source_name, fpath, "", "COMPLETED", n_rows, path,
+                (make_batch_id(source_name, os.path.basename(fpath)),
+                 source_name, fpath, "", "COMPLETED", n_rows, path,
                  f"{n_bad} rows quarantined" if n_bad else None)
-                for bid, fpath, n_rows, n_bad in per_file
+                for fpath, n_rows, n_bad in per_file
             ]
         )
         return {
-            "files": len(stats),
-            "rows": sum(p[2] for p in per_file),
-            "quarantined": sum(p[3] for p in per_file),
+            "files": len(per_file),
+            "rows": sum(p[1] for p in per_file),
+            "quarantined": sum(p[2] for p in per_file),
             "version_path": path,
         }
 

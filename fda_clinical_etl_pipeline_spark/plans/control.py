@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .provenance import local_frame
+
 _HEADER_SCHEMA = T.StructType(
     [
         T.StructField("control_id", T.StringType()),
@@ -85,20 +87,12 @@ class ControlStore:
             control_id, source_name, "PENDING", sched, comments
         )
         rows = [
-            Row(
-                control_id=control_id,
-                step_order=i + 1,
-                step_type=step_type,
-                config_json=json.dumps(config),
-            )
+            (control_id, i + 1, step_type, json.dumps(config))
             for i, (step_type, config) in enumerate(steps)
         ]
-        (
-            self.spark.createDataFrame(rows, _DETAIL_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.detail_path)
-        )
+        local_frame(self.spark, rows, _DETAIL_SCHEMA).write.mode(
+            "append"
+        ).parquet(self.detail_path)
         return control_id
 
     def mark(self, control_id: str, status: str, comments: str | None = None):
@@ -113,20 +107,11 @@ class ControlStore:
         )
 
     def _append_header(self, control_id, source, status, sched, comments):
-        row = Row(
-            control_id=control_id,
-            source_name=source,
-            status=status,
-            scheduled_time=float(sched),
-            event_time=time.time(),
-            comments=comments,
-        )
-        (
-            self.spark.createDataFrame([row], _HEADER_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.header_path)
-        )
+        row = (control_id, source, status, float(sched), time.time(),
+               comments)
+        local_frame(self.spark, [row], _HEADER_SCHEMA).write.mode(
+            "append"
+        ).parquet(self.header_path)
 
     # -- read side ---------------------------------------------------------
 

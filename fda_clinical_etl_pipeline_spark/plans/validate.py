@@ -15,7 +15,9 @@ quarantines the whole file, etl/validate.py:216-223). The engine compiles
   yields NULL, never a job failure (the cast-null idiom).
 
 At 100 TB: validation is a narrow map over the scan — no shuffle; the
-quarantine split is two filtered writes off one cached plan.
+quarantine split is two filtered writes off one cached plan
+(``ValidationResult.split`` over the frame ``ClinicalPipeline.run_bulk``
+persists, so the file is scanned once).
 """
 
 from __future__ import annotations
@@ -65,6 +67,16 @@ class ValidationResult:
     valid: DataFrame      # rows with no errors (original columns)
     quarantine: DataFrame  # rows with errors + _errors detail
 
+    @classmethod
+    def split(cls, annotated: DataFrame) -> "ValidationResult":
+        """Both outputs are filters over ``annotated``: persist it first,
+        and writing both scans the input once."""
+        return cls(
+            annotated=annotated,
+            valid=annotated.filter(F.size("_errors") == 0).drop("_errors"),
+            quarantine=annotated.filter(F.size("_errors") > 0),
+        )
+
     def error_summary(self) -> DataFrame:
         """Grouped error taxonomy counts — the provenance `details` payload
         (bounded, aggregated; never a driver-side list of rows)."""
@@ -104,10 +116,9 @@ def validate(df: DataFrame, schema_meta: list[dict]) -> ValidationResult:
     """Split a batch into valid/quarantine. No metadata ⇒ everything passes
     (the reference's skip-validation short-circuit, etl/validate.py:239-243).
     """
-    annotated = df.withColumn("_errors", errors_expr(df, schema_meta))
-    valid = annotated.filter(F.size("_errors") == 0).drop("_errors")
-    quarantine = annotated.filter(F.size("_errors") > 0)
-    return ValidationResult(annotated=annotated, valid=valid, quarantine=quarantine)
+    return ValidationResult.split(
+        df.withColumn("_errors", errors_expr(df, schema_meta))
+    )
 
 
 def extra_columns(df: DataFrame, schema_meta: list[dict]) -> list[str]:

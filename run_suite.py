@@ -25,9 +25,20 @@ improves with use; unknown files default to 25 s. Usage:
 
     python run_suite.py [--shards N] [--] [extra pytest args]
 
+Sizing: the shard count fits both the cores and ``MemAvailable``. Each
+shard is budgeted its JVM heap (``SPARK_GRAFT_DRIVER_MEM``, default 2g,
+passed on to the shards) plus ~2 GB of JVM off-heap and Python workers
+plus ~3 GB for its pytest process. The figures come from a 4-core,
+16 GB machine, where four 8g-heap shards were killed by the kernel's
+out-of-memory killer (JVMs at heap + ~1 GB, a pytest process at up to
+3.5 GB); that machine gets two shards. The chosen count and heap print
+first.
+
 Exit code 0 iff every shard reports 0 failures and 0 errors. The
 aggregate pass/fail counts and per-shard walls print at the end;
-per-shard logs land in /tmp/suite_shard_<i>/pytest.log.
+per-shard logs land in $TMPDIR/suite_shard_<i>/pytest.log. A shard
+killed by a signal is reported lost, with the file it was in and the
+number of its tests that never reported a result.
 """
 
 from __future__ import annotations
@@ -39,6 +50,7 @@ import re
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 WEIGHTS_FILE = os.path.join(
@@ -46,11 +58,40 @@ WEIGHTS_FILE = os.path.join(
     "tests", ".shard_weights.json",
 )
 DEFAULT_WEIGHT = 25.0
-# one local[4] Spark JVM per shard; size to the box so the suite fits
-# an external ~15-min verification window (VERDICT r14 task 2) without
-# oversubscribing a smaller machine. 10 shards on 32 cores measured
-# 11.4 min wall (r15); the JVMs are latency-bound, so cores/3 is safe.
-DEFAULT_SHARDS = max(4, min(10, (os.cpu_count() or 8) // 3))
+# one Spark JVM per shard. 10 shards on 32 cores measured 11.4 min wall
+# (r15); the JVMs are latency-bound, so two cores per shard suffice.
+MAX_SHARDS = 10
+DEFAULT_HEAP = "2g"
+SHARD_OVERHEAD_GB = 2.0 + 3.0  # off-heap + Python workers, pytest
+
+
+def heap_gb(heap: str) -> float:
+    """A JVM memory size (``2g``, ``1536m``) in GiB."""
+    units = {"k": 1 / 1024**2, "m": 1 / 1024, "g": 1.0, "t": 1024.0}
+    heap = heap.strip().lower()
+    if heap[-1:] in units:
+        return float(heap[:-1]) * units[heap[-1]]
+    return float(heap) / 1024**3
+
+
+def mem_available_gb() -> float | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) / 1024**2
+    except OSError:
+        pass
+    return None
+
+
+def plan_shards(cores: int, mem_gb: float | None, heap: str) -> int:
+    """As many shards as the cores and the available memory both hold,
+    at least one."""
+    n = min(MAX_SHARDS, cores // 2)
+    if mem_gb is not None:
+        n = min(n, int(mem_gb // (heap_gb(heap) + SHARD_OVERHEAD_GB)))
+    return max(1, n)
 
 # seed weights (measured r14, plain sequential run, local[4]) — used
 # until tests/.shard_weights.json exists; balance only, not a gate
@@ -114,8 +155,52 @@ def parse_summary(log: str) -> dict[str, int]:
     return out
 
 
+COLLECTED_RE = re.compile(r"^collected (\d+) items?", re.M)
+# pytest's progress lines: "tests/test_x.py ..F.s  [ 12%]", continued
+# on lines of result characters alone
+PROGRESS_RE = re.compile(
+    r"^(?:(tests/\S+\.py) )?([.sFExX]+)\s*(?:\[\s*\d+%\])?$", re.M
+)
+
+
+def lost_shard_report(i: int, rc: int, log: str,
+                      shard: list[str]) -> tuple[str, int]:
+    """What a shard killed by signal ``-rc`` left unreported: the report
+    line, and how many collected tests its log shows no result for."""
+    m = COLLECTED_RE.search(log)
+    collected = int(m.group(1)) if m else 0
+    reported, last = 0, None
+    for f, chars in PROGRESS_RE.findall(log):
+        reported += len(chars)
+        last = f or last
+    missing = max(collected - reported, 0)
+    names = [os.path.relpath(f, os.path.dirname(os.path.abspath(__file__)))
+             for f in shard]
+    start = names.index(last) if last in names else 0
+    after = f"after {last}" if last else "before its first result"
+    return (
+        f"shard {i} lost (rc={rc}, killed by signal {-rc}) {after}: "
+        f"{missing} of {collected} collected tests never reported "
+        f"(files {', '.join(names[start:])})",
+        missing,
+    )
+
+
+def shard_cmd(shard: list[str], extra: list[str]) -> list[str]:
+    return [
+        sys.executable, "-m", "pytest",
+        "-p", "no:cacheprovider",
+        # per-test wall lines for the weights refresh below
+        "--durations=0", "--durations-min=0.005",
+        *extra, *shard,
+    ]
+
+
 def main(argv: list[str]) -> int:
-    n_shards = DEFAULT_SHARDS
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_HEAP)
+    cores = os.cpu_count() or 8
+    mem_gb = mem_available_gb()
+    n_shards = plan_shards(cores, mem_gb, heap)
     extra: list[str] = []
     args = argv[1:]
     while args:
@@ -136,45 +221,53 @@ def main(argv: list[str]) -> int:
         return 2
     weights = load_weights()
     shards = partition(files, n_shards, weights)
+    mem = "unknown" if mem_gb is None else f"{mem_gb:.1f} GB"
+    print(f"run_suite: {len(shards)} shards, heap {heap} each "
+          f"({cores} cores, MemAvailable {mem})", flush=True)
 
     procs = []
     t0 = time.monotonic()
+    root = tempfile.gettempdir()
     for i, shard in enumerate(shards):
-        tmpdir = f"/tmp/suite_shard_{i}"
+        tmpdir = os.path.join(root, f"suite_shard_{i}")
         shutil.rmtree(tmpdir, ignore_errors=True)
         os.makedirs(tmpdir, exist_ok=True)
         # SPARK_GRAFT_SUITE_SHARD both marks shard children and stops
         # tests/conftest.py's full-suite sharded takeover from ever
         # recursing (children also run explicit file lists, which the
         # takeover ignores — this is the second lock on that door)
+        # unbuffered: a killed shard's log still shows its last results
         env = dict(os.environ, TMPDIR=tmpdir,
-                   SPARK_GRAFT_SUITE_SHARD="1")
+                   SPARK_GRAFT_SUITE_SHARD="1",
+                   SPARK_GRAFT_DRIVER_MEM=heap, PYTHONUNBUFFERED="1")
         log_path = os.path.join(tmpdir, "pytest.log")
-        log_f = open(log_path, "w")
-        cmd = [
-            sys.executable, "-m", "pytest", "-q",
-            "-p", "no:cacheprovider",
-            # per-test wall lines for the weights refresh below
-            "--durations=0", "--durations-min=0.005",
-            *extra, *shard,
-        ]
-        procs.append((i, shard, log_path,
-                      subprocess.Popen(cmd, cwd=here, env=env,
-                                       stdout=log_f,
-                                       stderr=subprocess.STDOUT)))
-        print(f"shard {i}: {len(shard)} files -> {log_path}")
+        with open(log_path, "w") as log_f:
+            procs.append((i, shard, log_path,
+                          subprocess.Popen(shard_cmd(shard, extra),
+                                           cwd=here, env=env,
+                                           stdout=log_f,
+                                           stderr=subprocess.STDOUT)))
+        print(f"shard {i}: {len(shard)} files -> {log_path}", flush=True)
 
     total = {"passed": 0, "failed": 0, "skipped": 0, "errors": 0}
     ok = True
+    lost: list[int] = []
+    unreported = 0
     new_weights: dict[str, float] = {}
     for i, shard, log_path, p in procs:
         rc = p.wait()
-        log = open(log_path).read()
+        with open(log_path) as f:
+            log = f.read()
         counts = parse_summary(log)
         for k in total:
             total[k] += counts[k]
         wall = time.monotonic() - t0
         print(f"shard {i}: rc={rc} {counts} (at {wall:.0f}s)")
+        if rc < 0:
+            line, missing = lost_shard_report(i, rc, log, shard)
+            print(line)
+            lost.append(i)
+            unreported += missing
         if rc != 0 or counts["failed"] or counts["errors"]:
             ok = False
             tail = "\n".join(log.splitlines()[-30:])
@@ -202,6 +295,9 @@ def main(argv: list[str]) -> int:
         words.append(f"{total['skipped']} skipped")
     if total["errors"]:
         words.append(f"{total['errors']} errors")
+    if lost:
+        words.append(f"{unreported} not reported (lost shards "
+                     f"{', '.join(map(str, lost))})")
     print(f"=== {', '.join(words)} in {wall:.1f}s "
           f"(sharded: {len(shards)} pytest processes) ===")
     if new_weights and ok:

@@ -154,3 +154,140 @@ def test_bulk_matches_per_batch_output(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(vp).collect()
     )
     assert bulk_rows == batch_rows
+
+
+CSV_HEADER = "patient_id,patient_name,ssn,dob,visit_date,diagnosis,notes\n"
+CSV_ROW = "P1,Ann Lee,111-22-3333,1970-01-01,2025-02-04,Flu,follow-up\n"
+
+
+def _csv_dir(tmp_path, files: dict[str, str]):
+    d = tmp_path / "csv_in"
+    d.mkdir()
+    for name, text in files.items():
+        (d / name).write_text(text)
+    return d
+
+
+def test_bulk_registers_empty_and_header_only_files(pipeline, tmp_path):
+    """A file without rows has no ``_input_file`` group; it still gets
+    its COMPLETED batch row, with total_rows 0 and the same file-URI
+    path form as the files that have rows."""
+    d = _csv_dir(tmp_path, {
+        "a.csv": CSV_HEADER + CSV_ROW,
+        "header_only.csv": CSV_HEADER,
+        "zero.csv": "",
+    })
+    res = pipeline.run_bulk("hospital_a", str(d))
+    assert (res["files"], res["rows"], res["quarantined"]) == (3, 1, 0)
+
+    got = {
+        os.path.basename(r["raw_file_path"]): r
+        for r in pipeline.prov.batches().collect()
+    }
+    assert set(got) == {"a.csv", "header_only.csv", "zero.csv"}
+    assert {n: r["total_rows"] for n, r in got.items()} == {
+        "a.csv": 1, "header_only.csv": 0, "zero.csv": 0,
+    }
+    assert all(r["status"] == "COMPLETED" for r in got.values())
+    assert {r["raw_file_path"].rsplit("/", 1)[0] for r in got.values()} \
+        == {"file://" + str(d)}
+
+
+def test_lineage_steps_and_rules_on_bulk_only_lake(pipeline, tmp_path):
+    """run_bulk writes batch rows only; the step and rule endpoints then
+    answer an empty list instead of a missing-path error."""
+    from fda_clinical_etl_pipeline_spark.api import LineageApi
+
+    d = _csv_dir(tmp_path, {"a.csv": CSV_HEADER + CSV_ROW})
+    pipeline.run_bulk("hospital_a", str(d))
+    bid = pipeline.prov.batches().collect()[0]["batch_id"]
+    api = LineageApi(pipeline.prov)
+    assert api.steps(bid) == []
+    assert api.rules(bid) == []
+    assert pipeline.prov.steps(bid).columns == [
+        "batch_id", "step_name", "step_time", "details_json",
+    ]
+
+
+def test_bulk_releases_its_cache(pipeline, spark, tmp_path, monkeypatch):
+    """The one persisted scan is unpersisted after run_bulk, also when
+    the versioned write raises."""
+    from fda_clinical_etl_pipeline_spark.sources import writers
+
+    d = _csv_dir(tmp_path, {"a.csv": CSV_HEADER + CSV_ROW * 3})
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    pipeline.run_bulk("hospital_a", str(d))
+    assert cached().size() == before
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("versioned write failed")
+
+    monkeypatch.setattr(writers, "write_versioned_artifact", boom)
+    with pytest.raises(RuntimeError, match="versioned write failed"):
+        pipeline.run_bulk("hospital_a", str(d))
+    assert cached().size() == before
+
+
+def test_bulk_without_invalid_rows_skips_quarantine(pipeline, spark,
+                                                     tmp_path, monkeypatch):
+    """The quarantine write is decided from the per-file counts: no
+    probing ``take`` job, and no quarantine directory when every row is
+    valid."""
+
+    def no_take(self, num):
+        raise AssertionError("run_bulk fired a take job")
+
+    monkeypatch.setattr(type(spark.range(1)), "take", no_take)
+    d = _csv_dir(tmp_path, {"a.csv": CSV_HEADER + CSV_ROW * 3})
+    res = pipeline.run_bulk("hospital_a", str(d))
+    assert (res["rows"], res["quarantined"]) == (3, 0)
+    assert not os.path.exists(
+        os.path.join(pipeline.zones.quarantine, "hospital_a")
+    )
+
+
+def test_provenance_append_one_file_same_values(spark, tmp_path,
+                                                monkeypatch):
+    """A 20-row append writes one file, and stores what the
+    ``createDataFrame(list)`` path stored on a UTC host, all-null long
+    and string columns included."""
+    import datetime
+    import glob
+    import time
+
+    from fda_clinical_etl_pipeline_spark.plans.provenance import (
+        BATCH_SCHEMA,
+        ProvenanceStore,
+        _now,
+    )
+
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    try:
+        now = _now()
+        rows = [
+            (f"b{i}", "src", "COMPLETED", f"file:///in/{i}.csv", "",
+             None, None, "/v", None, None if i % 2 else "err",
+             now + datetime.timedelta(microseconds=i), i)
+            for i in range(20)
+        ]
+        store = ProvenanceStore(spark, str(tmp_path / "prov"))
+        store._append(rows, "provenance_batch", BATCH_SCHEMA)
+        files = glob.glob(
+            str(tmp_path / "prov" / "provenance_batch" / "*" / "*.parquet")
+        )
+        stored = sorted(
+            tuple(r) for r in spark.read.parquet(
+                str(tmp_path / "prov" / "provenance_batch")
+            ).drop("p_month").collect()
+        )
+        old = sorted(
+            tuple(r)
+            for r in spark.createDataFrame(rows, BATCH_SCHEMA).collect()
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert len(files) == 1
+    assert stored == old
