@@ -224,13 +224,11 @@ def main() -> None:
     # The plan is (re)built OUTSIDE the timed region — equivalent to
     # what min-of-2 effectively recorded before (pass 2 never paid py4j
     # plan construction), so the numbers stay comparable to BENCH_r14.
-    from fda_clinical_etl_pipeline_spark import registry as _registry
+    from fda_clinical_etl_pipeline_spark.cache import invalidate
 
     def _fresh_plan(name: str):
         spark.catalog.clearCache()
-        entry = _registry._plan_cache.get(id(spark))
-        if entry is not None:
-            entry[1].pop((name, sf_dir), None)
+        invalidate(spark, name, sf_dir)
         return queries[name].fn(spark, sf_dir)
 
     # best-of-2: single samples at this scale carry ±2x GC/scheduling

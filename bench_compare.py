@@ -146,16 +146,14 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    from fda_clinical_etl_pipeline_spark import registry as _registry
+    from fda_clinical_etl_pipeline_spark.cache import invalidate
 
     def _fresh_plan(name, q):
         # clean slate per timed execution: no persisted intermediate
         # from a previous pass survives; plan (re)built untimed, the
         # same steady-state cost min-of-n recorded before
         spark.catalog.clearCache()
-        entry = _registry._plan_cache.get(id(spark))
-        if entry is not None:
-            entry[1].pop((name, SF_DIR), None)
+        invalidate(spark, name, SF_DIR)
         return q.fn(spark, SF_DIR)
 
     qs = all_queries()

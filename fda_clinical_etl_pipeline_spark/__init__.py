@@ -22,9 +22,10 @@ Layout
 
 __version__ = "0.1.0"
 
-# Session hygiene for long-lived consumers: registered query plans
-# persist reused intermediates internally; release them between
-# requests with release_persists(spark) (safe any time — later actions
-# recompute and re-cache). Re-exported here so harnesses and services
+# Session hygiene for long-lived consumers: cache.py owns each session's
+# cached plans and the intermediates they persist. A plan evicted from
+# the plan cache unpersists its frames; release_persists(spark) releases
+# every frame tracked for the session between requests (safe any time —
+# later actions recompute). Re-exported here so harnesses and services
 # need not know the module layout.
 from .cache import persist_tracked, release_persists  # noqa: E402,F401

@@ -20,22 +20,29 @@ source parquet:
   precombine ordering, meta-column preservation, or time-travel slice
   resolution flips the hash.
 
-The scratch table builds once per (spec, sf_dir) under the system temp
-dir and is reused via a completion marker — the build itself is the
-operator under test; the registered queries then read it log-only.
+Each gate's scratch tables build once per (gate, sf_dir) under the
+system temp dir, through ``_gate_root``: a completion marker records the
+code they were built with (the md5 of every package module this file
+imports, transitively), so a process running changed writer code
+rebuilds them instead of reading what older code wrote. The build itself
+is the operator under test; the registered queries then read the tables
+log-only.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import depcheck
 from ..registry import register
 from ..sources.hudi_table import HudiTable
 from ._util import read_table
@@ -44,52 +51,80 @@ I1 = "20240101120000000"
 I2 = "20240102120000000"
 I3 = "20240103120000000"
 
-_GATE_SPEC = "hudi-gate-v1"
+
+@functools.cache
+def _gate_code() -> dict[str, str]:
+    """md5 per package module in this file's import closure."""
+    hashes = depcheck.module_hashes()
+    closure = depcheck._closure(
+        "operators/lakehouse.py", depcheck.import_graph()
+    )
+    return {rel: hashes[rel] for rel in sorted(closure)}
+
+
+def _gate_root(
+    sf_dir: str, name: str, build: Callable[[str], object]
+) -> tuple[str, object]:
+    """The scratch directory of gate ``name`` at ``sf_dir``, and what
+    ``build(root)`` returned when it last filled it. ``build`` runs only
+    when the directory's marker is missing or records other code; it must
+    return a JSON value, kept in the marker for later processes."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    root = os.path.join(
+        tempfile.gettempdir(), f"fda_spark_gate_{name}_{tag}"
+    )
+    marker = os.path.join(root, "_gate_complete.json")
+    try:
+        with open(marker) as f:
+            done = json.load(f)
+        if done["code"] == _gate_code():
+            return root, done["info"]
+    except (OSError, ValueError, KeyError):
+        pass
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root)
+    info = build(root)
+    with open(marker, "w") as f:
+        json.dump({"sf_dir": sf_dir, "code": _gate_code(), "info": info}, f)
+    return root, info
 
 
 def _gate_table(spark: SparkSession, sf_dir: str) -> HudiTable:
-    """Build (once) the pinned three-commit Hudi gate table."""
-    tag = hashlib.md5(
-        f"{_GATE_SPEC}|{sf_dir}".encode()
-    ).hexdigest()[:10]
-    root = os.path.join(
-        tempfile.gettempdir(), f"fda_spark_hudi_gate_{tag}"
-    )
-    marker = os.path.join(root, "_gate_complete.json")
-    if os.path.isfile(marker):
-        return HudiTable(spark, root)
-    shutil.rmtree(root, ignore_errors=True)
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.round(F.col("c_acctbal"), 2).alias("bal"),
-    )
-    t = HudiTable.create(
-        spark, root, "gate_customers", record_key="k", precombine="ver"
-    )
-    k = F.col("k")
-    t.upsert(
-        cust.filter(k <= 100).withColumn("ver", F.lit(1)),
-        instant=I1, insert_groups=4,
-    )
-    t.upsert(
-        cust.filter(k <= 50)
-        .withColumn("bal", F.round(F.col("bal") + 100, 2))
-        .withColumn("ver", F.lit(2)),
-        instant=I2,
-    )
-    losers = (
-        cust.filter((k > 25) & (k <= 75))
-        .withColumn("bal", F.lit(-1.0))
-        .withColumn("ver", F.lit(0))
-    )
-    fresh = (
-        cust.filter((k > 100) & (k <= 120))
-        .withColumn("ver", F.lit(0))
-    )
-    t.upsert(losers.unionByName(fresh), instant=I3, insert_groups=2)
-    with open(marker, "w") as f:
-        json.dump({"spec": _GATE_SPEC, "sf_dir": sf_dir}, f)
-    return t
+    """The pinned three-commit Hudi gate table."""
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("k"),
+            F.round(F.col("c_acctbal"), 2).alias("bal"),
+        )
+        t = HudiTable.create(
+            spark, root, "gate_customers", record_key="k",
+            precombine="ver",
+        )
+        k = F.col("k")
+        t.upsert(
+            cust.filter(k <= 100).withColumn("ver", F.lit(1)),
+            instant=I1, insert_groups=4,
+        )
+        t.upsert(
+            cust.filter(k <= 50)
+            .withColumn("bal", F.round(F.col("bal") + 100, 2))
+            .withColumn("ver", F.lit(2)),
+            instant=I2,
+        )
+        losers = (
+            cust.filter((k > 25) & (k <= 75))
+            .withColumn("bal", F.lit(-1.0))
+            .withColumn("ver", F.lit(0))
+        )
+        fresh = (
+            cust.filter((k > 100) & (k <= 120))
+            .withColumn("ver", F.lit(0))
+        )
+        t.upsert(losers.unionByName(fresh), instant=I3, insert_groups=2)
+
+    root, _ = _gate_root(sf_dir, "hudi_cow", build)
+    return HudiTable(spark, root)
 
 
 def _per_commit_rollup(snap: DataFrame) -> DataFrame:
@@ -176,18 +211,6 @@ def hudi_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- evolution gates
-_DELTA_SPEC = "delta-evolution-gate-v1"
-_ICE_SPEC = "iceberg-evolution-gate-v1"
-
-
-def _scratch(tag_src: str) -> tuple[str, str]:
-    tag = hashlib.md5(tag_src.encode()).hexdigest()[:10]
-    root = os.path.join(
-        tempfile.gettempdir(), f"fda_spark_lake_gate_{tag}"
-    )
-    return root, os.path.join(root, "_gate_complete.json")
-
-
 def _gate_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
@@ -276,9 +299,7 @@ def delta_evolution_roundtrip(
 ) -> DataFrame:
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_DELTA_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = _gate_customers(spark, sf_dir).filter(
             F.col("k") <= 150
         ).withColumn("ver", F.lit(1))
@@ -289,10 +310,9 @@ def delta_evolution_roundtrip(
             t, spark, sf_dir,
             lambda fresh: t.append(fresh, merge_schema=True),
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _DELTA_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_evolution", build)
+    t = DeltaProtocolTable(spark, root)
     return _evolution_rollup(
         t.snapshot().select("k", "bal", "segment", "tier")
     )
@@ -313,9 +333,7 @@ def iceberg_evolution_roundtrip(
 
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_ICE_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = _gate_customers(spark, sf_dir).filter(
             F.col("k") <= 150
         ).withColumn("ver", F.lit(1).cast("long"))
@@ -339,17 +357,15 @@ def iceberg_evolution_roundtrip(
             t.append(fresh)
 
         _evolution_flow(_Shim(), spark, sf_dir, add_tier)
-        with open(marker, "w") as f:
-            json.dump({"spec": _ICE_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_evolution", build)
+    t = IcebergTable(spark, root)
     return _evolution_rollup(
         t.snapshot().select("k", "bal", "segment", "tier")
     )
 
 
 # ------------------------------------------------- MOR gate
-_MOR_SPEC = "hudi-mor-gate-v1"
 M1 = "20240201120000000"
 M2 = "20240202120000000"
 M3 = "20240203120000000"
@@ -364,53 +380,47 @@ def _mor_gate_table(spark: SparkSession, sf_dir: str) -> HudiTable:
     losing upsert. Every MOR mechanism (Avro data blocks, tombstone
     ordering, compaction fold, post-compact logs, precombine losers)
     participates in the final answer the oracle pins."""
-    tag = hashlib.md5(f"{_MOR_SPEC}|{sf_dir}".encode()).hexdigest()[:10]
-    root = os.path.join(
-        tempfile.gettempdir(), f"fda_spark_hudi_mor_gate_{tag}"
-    )
-    marker = os.path.join(root, "_gate_complete.json")
-    if os.path.isfile(marker):
-        return HudiTable(spark, root)
-    shutil.rmtree(root, ignore_errors=True)
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.round(F.col("c_acctbal"), 2).alias("bal"),
-    )
-    k = F.col("k")
-    t = HudiTable.create(
-        spark, root, "mor_gate_customers", record_key="k",
-        precombine="ver", table_type="MERGE_ON_READ",
-    )
-    t.upsert(cust.filter(k <= 100).withColumn("ver", F.lit(1)),
-             instant=M1, insert_groups=4)
-    # updates land as AVRO_DATA log blocks (no base rewrite)
-    t.upsert(
-        cust.filter(k <= 50)
-        .withColumn("bal", F.round(F.col("bal") + 100, 2))
-        .withColumn("ver", F.lit(2)),
-        instant=M2,
-    )
-    # DELETE log blocks
-    t.delete_where((k > 25) & (k <= 60), instant=M3)
-    # an upsert AFTER the delete revives keys 31..40
-    t.upsert(
-        cust.filter((k > 30) & (k <= 40))
-        .withColumn("bal", F.lit(-50.0))
-        .withColumn("ver", F.lit(3)),
-        instant=M4,
-    )
-    # fold every log into new base files — answers must not move
-    t.compact(instant=M5)
-    # post-compaction losing re-send (ver=0 must NOT overwrite)
-    t.upsert(
-        cust.filter(k <= 10)
-        .withColumn("bal", F.lit(-1.0))
-        .withColumn("ver", F.lit(0)),
-        instant=M6,
-    )
-    with open(marker, "w") as f:
-        json.dump({"spec": _MOR_SPEC, "sf_dir": sf_dir}, f)
-    return t
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("k"),
+            F.round(F.col("c_acctbal"), 2).alias("bal"),
+        )
+        k = F.col("k")
+        t = HudiTable.create(
+            spark, root, "mor_gate_customers", record_key="k",
+            precombine="ver", table_type="MERGE_ON_READ",
+        )
+        t.upsert(cust.filter(k <= 100).withColumn("ver", F.lit(1)),
+                 instant=M1, insert_groups=4)
+        # updates land as AVRO_DATA log blocks (no base rewrite)
+        t.upsert(
+            cust.filter(k <= 50)
+            .withColumn("bal", F.round(F.col("bal") + 100, 2))
+            .withColumn("ver", F.lit(2)),
+            instant=M2,
+        )
+        # DELETE log blocks
+        t.delete_where((k > 25) & (k <= 60), instant=M3)
+        # an upsert AFTER the delete revives keys 31..40
+        t.upsert(
+            cust.filter((k > 30) & (k <= 40))
+            .withColumn("bal", F.lit(-50.0))
+            .withColumn("ver", F.lit(3)),
+            instant=M4,
+        )
+        # fold every log into new base files — answers must not move
+        t.compact(instant=M5)
+        # post-compaction losing re-send (ver=0 must NOT overwrite)
+        t.upsert(
+            cust.filter(k <= 10)
+            .withColumn("bal", F.lit(-1.0))
+            .withColumn("ver", F.lit(0)),
+            instant=M6,
+        )
+
+    root, _ = _gate_root(sf_dir, "hudi_mor", build)
+    return HudiTable(spark, root)
 
 
 _ORACLE_MOR = f"""
@@ -440,7 +450,6 @@ _ORACLE_MOR = f"""
 
 
 # ------------------------------------------- equality-delete gate
-_EQ_SPEC = "iceberg-eqdelete-gate-v1"
 
 _ORACLE_EQ = """
     SELECT segment,
@@ -481,9 +490,7 @@ def iceberg_eq_delete_roundtrip(
 ) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_EQ_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -511,10 +518,9 @@ def iceberg_eq_delete_roundtrip(
         t.equality_delete(
             cust.filter(k == 1).select("k"), ["k"]
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _EQ_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_eq_delete_roundtrip", build)
+    t = IcebergTable(spark, root)
     return (
         t.snapshot()
         .groupBy("segment")
@@ -529,7 +535,6 @@ def iceberg_eq_delete_roundtrip(
 
 
 # ------------------------------------------- conversion-replay gate
-_CONV_SPEC = "convert-replay-gate-v1"
 
 _ORACLE_CONV = """
     SELECT state, segment,
@@ -574,13 +579,8 @@ def lakehouse_convert_replay(
     from ..sources.convert import convert_table
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_CONV_SPEC}|{sf_dir}")
-    src, dst = os.path.join(root, "delta_src"), os.path.join(
-        root, "hudi_dst"
-    )
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root: str) -> None:
+        src = os.path.join(root, "delta_src")
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -597,13 +597,13 @@ def lakehouse_convert_replay(
             key="k", precombine="ver",
         )
         convert_table(
-            spark, src, dst, "hudi", record_key="k",
-            precombine="ver", history_versions=3,
+            spark, src, os.path.join(root, "hudi_dst"), "hudi",
+            record_key="k", precombine="ver", history_versions=3,
             hudi_table_type="MERGE_ON_READ",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _CONV_SPEC, "sf_dir": sf_dir}, f)
-    t = HudiTable(spark, dst)
+
+    root, _ = _gate_root(sf_dir, "lakehouse_convert_replay", build)
+    t = HudiTable(spark, os.path.join(root, "hudi_dst"))
     cs = t.commits()
     # ascending: [v0 upsert, delete of vanished keys, v1 upsert,
     # v2 upsert] — cs[1] is the propagated delete
@@ -688,7 +688,6 @@ def hudi_incremental_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- restore/rollback gate
-_RESTORE_SPEC = "lakehouse-restore-gate-v1"
 R1 = "20240301120000000"
 R2 = "20240302120000000"
 R3 = "20240303120000000"
@@ -740,22 +739,16 @@ def lakehouse_restore_rollup(
     from ..sources.delta_log import DeltaProtocolTable
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_RESTORE_SPEC}|{sf_dir}")
-    droot = os.path.join(root, "delta")
-    hroot = os.path.join(root, "hudi")
-    iroot = os.path.join(root, "iceberg")
-    cust = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.round(F.col("c_acctbal"), 2).alias("bal"),
-    )
-    k = F.col("k")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("k"),
+            F.round(F.col("c_acctbal"), 2).alias("bal"),
+        )
+        k = F.col("k")
         # delta: create -> append -> DV delete -> RESTORE to pre-delete
         df = cust.filter(k <= 100).withColumn("ver", F.lit(1))
         dt = DeltaProtocolTable.create(
-            spark, droot, df.repartition(2), key="k", precombine="ver"
+            spark, os.path.join(root, "delta"), df.repartition(2), key="k", precombine="ver"
         )
         dt.append(
             cust.filter((k > 100) & (k <= 140))
@@ -766,7 +759,7 @@ def lakehouse_restore_rollup(
         dt.restore(v_good)
         # iceberg: create -> append -> metadata-only rollback
         it = IcebergTable.create(
-            spark, iroot,
+            spark, os.path.join(root, "iceberg"),
             cust.filter(k <= 100).withColumn(
                 "ver", F.lit(1).cast("long")
             ),
@@ -779,7 +772,7 @@ def lakehouse_restore_rollup(
         it.rollback_to_snapshot(s_good)
         # hudi MOR: good state savepointed, bad upsert + delete, restore
         ht = HudiTable.create(
-            spark, hroot, "restore_gate", record_key="k",
+            spark, os.path.join(root, "hudi"), "restore_gate", record_key="k",
             precombine="ver", table_type="MERGE_ON_READ",
         )
         ht.upsert(
@@ -801,12 +794,11 @@ def lakehouse_restore_rollup(
         )
         ht.delete_where(k > 80, instant=R4)
         ht.restore_to_savepoint(R2)
-        with open(marker, "w") as f:
-            json.dump({"spec": _RESTORE_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        dt = DeltaProtocolTable(spark, droot)
-        it = IcebergTable(spark, iroot)
-        ht = HudiTable(spark, hroot)
+
+    root, _ = _gate_root(sf_dir, "lakehouse_restore_rollup", build)
+    dt = DeltaProtocolTable(spark, os.path.join(root, "delta"))
+    it = IcebergTable(spark, os.path.join(root, "iceberg"))
+    ht = HudiTable(spark, os.path.join(root, "hudi"))
 
     def _roll(snap: DataFrame, fmt: str) -> DataFrame:
         return (
@@ -830,7 +822,6 @@ def lakehouse_restore_rollup(
 
 
 # ------------------------------------------- hidden-partition gate
-_HIDDEN_SPEC = "iceberg-hidden-gate-v1"
 _HIDDEN_KEYS = (7, 37, 77, 117)
 
 _ORACLE_HIDDEN = f"""
@@ -860,9 +851,7 @@ def iceberg_hidden_partition_probe(
 ) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_HIDDEN_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         ).filter(F.col("k") <= 200)
@@ -870,10 +859,9 @@ def iceberg_hidden_partition_probe(
             spark, root, df,
             partition_by=["bucket(8, k)", "truncate(1, segment)"],
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _HIDDEN_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_hidden_partition_probe", build)
+    t = IcebergTable(spark, root)
     out = None
     for key in _HIDDEN_KEYS:
         probe = t.read_eq(k=key).select("k", "bal", "segment")
@@ -882,7 +870,6 @@ def iceberg_hidden_partition_probe(
 
 
 # ------------------------------------------- compaction gate
-_COMPACT_SPEC = "iceberg-compact-gate-v1"
 
 _ORACLE_COMPACT = """
     WITH final_state AS (
@@ -932,9 +919,7 @@ def iceberg_compact_roundtrip(
 ) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_COMPACT_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -955,10 +940,9 @@ def iceberg_compact_roundtrip(
             target_file_size_bytes=4000, sort_by=["k"]
         )
         t.equality_delete(cust.filter(k == 5).select("k"), ["k"])
-        with open(marker, "w") as f:
-            json.dump({"spec": _COMPACT_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_compact_roundtrip", build)
+    t = IcebergTable(spark, root)
 
     def _rollup(df: DataFrame, part: str) -> DataFrame:
         return (
@@ -981,7 +965,6 @@ def iceberg_compact_roundtrip(
 
 
 # ------------------------------------------- delta generated gate
-_GEN_SPEC = "delta-generated-gate-v1"
 _GEN_KEYS = (11, 44, 97, 160)
 
 _ORACLE_GEN = f"""
@@ -1015,9 +998,7 @@ def delta_generated_partition_probe(
 ) -> DataFrame:
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_GEN_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         ).filter(F.col("k") <= 200)
@@ -1029,10 +1010,9 @@ def delta_generated_partition_probe(
                 "seg1": "substring(segment, 1, 1)",
             },
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _GEN_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_generated_partition_probe", build)
+    t = DeltaProtocolTable(spark, root)
     out = None
     for key in _GEN_KEYS:
         probe = t.read_eq(k=key).select("k", "bal", "segment")
@@ -1041,7 +1021,6 @@ def delta_generated_partition_probe(
 
 
 # ------------------------------------- delta clustered-table gate
-_CLUSTER_SPEC = "delta-clustered-gate-v1"
 
 _ORACLE_CLUSTERED = """
     SELECT probe, n_rows, n_keys, sum_bal FROM (
@@ -1078,9 +1057,7 @@ _ORACLE_CLUSTERED = """
 def delta_clustered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_CLUSTER_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = (
             read_table(spark, sf_dir, "customer")
             .select(
@@ -1093,10 +1070,9 @@ def delta_clustered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t = DeltaProtocolTable.create(spark, root, df)
         t.compact(target_files=8, cluster_by=["k", "nat"])
-        with open(marker, "w") as f:
-            json.dump({"spec": _CLUSTER_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_clustered_probe", build)
+    t = DeltaProtocolTable(spark, root)
     if t.clustering_columns() != ["k", "nat"]:
         raise RuntimeError(
             "clustered gate table lost its delta.clustering domain "
@@ -1116,7 +1092,6 @@ def delta_clustered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------- iceberg puffin stats gate
-_PUFFIN_SPEC = "iceberg-puffin-gate-v1"
 
 _ORACLE_PUFFIN = """
     SELECT column_name, ndv FROM (
@@ -1149,9 +1124,7 @@ _ORACLE_PUFFIN = """
 def iceberg_puffin_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_PUFFIN_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         df = (
             read_table(spark, sf_dir, "customer")
             .select(
@@ -1163,10 +1136,9 @@ def iceberg_puffin_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t = IcebergTable.create(spark, root, df)
         t.compute_table_stats(columns=["k", "nat", "seg"])
-        with open(marker, "w") as f:
-            json.dump({"spec": _PUFFIN_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_puffin_ndv", build)
+    t = IcebergTable(spark, root)
     stats = t.table_stats()
     return spark.createDataFrame(
         sorted(stats.items()), "column_name string, ndv long"
@@ -1174,7 +1146,6 @@ def iceberg_puffin_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- delta merge gate
-_MERGE_SPEC = "delta-merge-gate-v1"
 
 _ORACLE_MERGE = """
     SELECT segment,
@@ -1222,9 +1193,7 @@ def delta_merge_roundtrip(
 ) -> DataFrame:
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_MERGE_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1260,10 +1229,9 @@ def delta_merge_roundtrip(
             },
             not_matched_insert_condition="s.bal > 0",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _MERGE_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_merge_roundtrip", build)
+    t = DeltaProtocolTable(spark, root)
     return (
         t.snapshot()
         .groupBy("segment")
@@ -1277,7 +1245,6 @@ def delta_merge_roundtrip(
     )
 
 
-_ICE_MERGE_SPEC = "iceberg-merge-gate-v1"
 
 
 @register(
@@ -1297,9 +1264,7 @@ def iceberg_merge_roundtrip(
 ) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_ICE_MERGE_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1323,10 +1288,9 @@ def iceberg_merge_roundtrip(
             },
             not_matched_insert_condition="s.bal > 0",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _ICE_MERGE_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_merge_roundtrip", build)
+    t = IcebergTable(spark, root)
     return (
         t.snapshot()
         .groupBy("segment")
@@ -1341,7 +1305,6 @@ def iceberg_merge_roundtrip(
 
 
 # ------------------------------------------- uniform-view gate
-_UNIFORM_SPEC = "uniform-view-gate-v1"
 
 _ORACLE_UNIFORM = """
     SELECT segment,
@@ -1380,11 +1343,8 @@ def lakehouse_uniform_view(
     from ..sources.iceberg import IcebergTable
     from ..sources.uniform import sync_iceberg_uniform
 
-    root, marker = _scratch(f"{_UNIFORM_SPEC}|{sf_dir}")
-    delta_root = os.path.join(root, "delta")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root: str) -> None:
+        delta_root = os.path.join(root, "delta")
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1397,13 +1357,10 @@ def lakehouse_uniform_view(
             cust.filter(k <= 20), on="k",
             when_matched_update={"bal": "round(t.bal + 100, 2)"},
         )
-        ice = sync_iceberg_uniform(spark, delta_root)
-        with open(marker, "w") as f:
-            json.dump({"spec": _UNIFORM_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        ice = IcebergTable(
-            spark, os.path.join(delta_root, "_iceberg")
-        )
+        sync_iceberg_uniform(spark, delta_root)
+
+    root, _ = _gate_root(sf_dir, "lakehouse_uniform_view", build)
+    ice = IcebergTable(spark, os.path.join(root, "delta", "_iceberg"))
     return (
         ice.snapshot()
         .groupBy("segment")
@@ -1418,7 +1375,6 @@ def lakehouse_uniform_view(
 
 
 # ---------------------------------------- reverse-uniform gate
-_UNIFORM_REV_SPEC = "uniform-reverse-gate-v1"
 
 
 @register(
@@ -1443,11 +1399,8 @@ def lakehouse_uniform_reverse(
     from ..sources.iceberg import IcebergTable
     from ..sources.uniform import sync_delta_uniform
 
-    root, marker = _scratch(f"{_UNIFORM_REV_SPEC}|{sf_dir}")
-    ice_root = os.path.join(root, "ice")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root: str) -> None:
+        ice_root = os.path.join(root, "ice")
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1464,13 +1417,10 @@ def lakehouse_uniform_reverse(
         # has position-delete debt to convert (purge folds both kinds)
         t.purge_deletes()
         t.delete_where((F.col("k") % 11) == 0, mode="mor")
-        d = sync_delta_uniform(spark, ice_root)
-        with open(marker, "w") as f:
-            json.dump({"spec": _UNIFORM_REV_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        d = DeltaProtocolTable(
-            spark, os.path.join(ice_root, "_delta")
-        )
+        sync_delta_uniform(spark, ice_root)
+
+    root, _ = _gate_root(sf_dir, "lakehouse_uniform_reverse", build)
+    d = DeltaProtocolTable(spark, os.path.join(root, "ice", "_delta"))
     return (
         d.snapshot()
         .groupBy("segment")
@@ -1485,7 +1435,6 @@ def lakehouse_uniform_reverse(
 
 
 # ------------------------------------------- delta CDF net gate
-_CDF_NET_SPEC = "delta-cdf-net-gate-v1"
 
 _ORACLE_CDF_NET = """
     WITH base AS (
@@ -1530,9 +1479,7 @@ def delta_cdf_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.cdc import net_changes
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_CDF_NET_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1547,10 +1494,9 @@ def delta_cdf_net(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_matched_update={"bal": "round(t.bal + 50, 2)"},
             when_not_matched_insert="all",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _CDF_NET_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_cdf_net", build)
+    t = DeltaProtocolTable(spark, root)
     churn = t.table_changes(1)  # window starts after the create
     return (
         net_changes(
@@ -1563,7 +1509,6 @@ def delta_cdf_net(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- hudi changelog net gate
-_HUDI_NET_SPEC = "hudi-changelog-net-gate-v2"  # v2: cdc_enabled table
 
 _ORACLE_HUDI_NET = """
     WITH base AS (
@@ -1606,9 +1551,7 @@ _ORACLE_HUDI_NET = """
 def hudi_changelog_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.cdc import net_changes
 
-    root, marker = _scratch(f"{_HUDI_NET_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = (
             _gate_customers(spark, sf_dir)
             .withColumnRenamed("seg", "segment")
@@ -1633,10 +1576,9 @@ def hudi_changelog_net(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_not_matched_insert="all",
             instant="20240103000000000",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _HUDI_NET_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = HudiTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "hudi_changelog_net", build)
+    t = HudiTable(spark, root)
     churn = t.changelog(from_instant="20240101000000000")
     return (
         net_changes(churn.drop("_commit_instant"), keys=["k"])
@@ -1646,7 +1588,6 @@ def hudi_changelog_net(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- changelog gate
-_CHANGELOG_SPEC = "iceberg-changelog-gate-v1"
 
 _ORACLE_CHANGELOG = """
     SELECT change_type,
@@ -1684,12 +1625,10 @@ def _changelog_gate_table(spark: SparkSession, sf_dir: str):
     """Shared scratch table + churn window of the two changelog
     gates: create (keys <= 150) -> equality-delete every 9th ->
     MERGE (update live <= 30, insert dead <= 30 back with original
-    values and fresh 151..160). Returns (churn_df, table)."""
+    values and fresh 151..160). Returns the churn window."""
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_CHANGELOG_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> int:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1708,14 +1647,10 @@ def _changelog_gate_table(spark: SparkSession, sf_dir: str):
             when_matched_update={"bal": "round(t.bal + 100, 2)"},
             when_not_matched_insert="all",
         )
-        with open(marker, "w") as f:
-            json.dump({"spec": _CHANGELOG_SPEC, "sf_dir": sf_dir,
-                       "s0": s0}, f)
-    else:
-        t = IcebergTable(spark, root)
-        with open(marker) as f:
-            s0 = json.load(f)["s0"]
-    return t.changelog_scan(from_snapshot_id=s0), t
+        return s0
+
+    root, s0 = _gate_root(sf_dir, "iceberg_changelog", build)
+    return IcebergTable(spark, root).changelog_scan(from_snapshot_id=s0)
 
 
 _ORACLE_CHANGELOG_NET = """
@@ -1763,7 +1698,7 @@ def iceberg_changelog_net(
 ) -> DataFrame:
     from ..sources.cdc import net_changes
 
-    churn, _t = _changelog_gate_table(spark, sf_dir)
+    churn = _changelog_gate_table(spark, sf_dir)
     return (
         net_changes(churn, keys=["k"])
         .select("_change_type", "k", "bal", "segment")
@@ -1788,7 +1723,7 @@ def iceberg_changelog_net(
 def iceberg_changelog_scan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    churn, _t = _changelog_gate_table(spark, sf_dir)
+    churn = _changelog_gate_table(spark, sf_dir)
     return (
         churn
         .groupBy(F.col("_change_type").alias("change_type"))
@@ -1801,7 +1736,6 @@ def iceberg_changelog_scan(
 
 
 # --------------------------------- deletion-vector (v3) gate
-_DV_SPEC = "iceberg-dv-gate-v2"  # v2: single-magic v3 blob framing
 
 _ORACLE_DV = """
     SELECT segment,
@@ -1840,9 +1774,7 @@ _ORACLE_DV = """
 def iceberg_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_DV_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).withColumnRenamed(
             "seg", "segment"
         )
@@ -1853,10 +1785,9 @@ def iceberg_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.delete_where(k % 7 == 0, mode="dv")
         t.delete_where((k > 100) & (k <= 110), mode="dv")
-        with open(marker, "w") as f:
-            json.dump({"spec": _DV_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_dv_roundtrip", build)
+    t = IcebergTable(spark, root)
     return (
         t.snapshot()
         .groupBy("segment")
@@ -1871,7 +1802,6 @@ def iceberg_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------- v3 row lineage gate
-_LINEAGE_SPEC = "iceberg-rowlineage-gate-v1"
 
 _ORACLE_LINEAGE = """
     SELECT k, row_id, lusn FROM (
@@ -1918,9 +1848,7 @@ _ORACLE_LINEAGE = """
 def iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.iceberg import IcebergTable
 
-    root, marker = _scratch(f"{_LINEAGE_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = read_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("k"),
             F.round(F.col("c_acctbal"), 2).alias("bal"),
@@ -1944,10 +1872,9 @@ def iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k long, bal double",
         ))
         t.upsert(inc, key="k", precombine="bal", mode="cow")
-        with open(marker, "w") as f:
-            json.dump({"spec": _LINEAGE_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = IcebergTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "iceberg_row_lineage", build)
+    t = IcebergTable(spark, root)
     lin = t.snapshot_lineage()
     per_key = lin.filter(F.col("k") <= 120).select(
         "k",
@@ -1967,7 +1894,6 @@ def iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------- delta row tracking gate
-_RT_SPEC = "delta-rowtracking-gate-v1"
 
 _ORACLE_ROW_TRACKING = """
     SELECT k, row_id, rcv FROM (
@@ -2014,9 +1940,7 @@ _ORACLE_ROW_TRACKING = """
 def delta_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_RT_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = read_table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("k"),
             F.round(F.col("c_acctbal"), 2).alias("bal"),
@@ -2041,10 +1965,9 @@ def delta_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k long, bal double",
         ))
         t.upsert(inc, mode="cow")
-        with open(marker, "w") as f:
-            json.dump({"spec": _RT_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_row_tracking", build)
+    t = DeltaProtocolTable(spark, root)
     rt = t.snapshot_row_tracking()
     per_key = rt.filter(F.col("k") <= 120).select(
         "k",
@@ -2064,7 +1987,6 @@ def delta_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------- symlink manifest export
-_MANIFEST_SPEC = "manifest-export-gate-v1"
 
 _MANIFEST_ORACLE = """
     SELECT seg,
@@ -2105,9 +2027,7 @@ def lakehouse_manifest_export(
         read_symlink_manifest,
     )
 
-    root, marker = _scratch(f"{_MANIFEST_SPEC}|{sf_dir}")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir)
         k = F.col("k")
         t = DeltaProtocolTable.create(
@@ -2122,8 +2042,8 @@ def lakehouse_manifest_export(
             mode="cow",
         )
         export_symlink_manifest(t)
-        with open(marker, "w") as f:
-            json.dump({"spec": _MANIFEST_SPEC, "sf_dir": sf_dir}, f)
+
+    root, _ = _gate_root(sf_dir, "lakehouse_manifest_export", build)
     snap = read_symlink_manifest(spark, root)
     return (
         snap.groupBy("seg")
@@ -2136,7 +2056,6 @@ def lakehouse_manifest_export(
 
 
 # -------------------------------------------- metadata-only aggregates
-_STATS_AGG_SPEC = "stats-agg-gate-v1"
 
 _STATS_AGG_ORACLE = """
     WITH delta_final AS (
@@ -2203,10 +2122,8 @@ def lakehouse_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         iceberg_metadata_aggregate,
     )
 
-    root, marker = _scratch(f"{_STATS_AGG_SPEC}|{sf_dir}")
-    k = F.col("k")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> int:
+        k = F.col("k")
         cust = _gate_customers(spark, sf_dir)
         dt = DeltaProtocolTable.create(
             spark, os.path.join(root, "delta"),
@@ -2229,13 +2146,11 @@ def lakehouse_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pre_sid = it.metadata()["current-snapshot-id"]
         it.delete_where(k <= 20, mode="mor")
-        with open(marker, "w") as f:
-            json.dump({"spec": _STATS_AGG_SPEC, "sf_dir": sf_dir,
-                       "pre_sid": pre_sid}, f)
-    else:
-        dt = DeltaProtocolTable(spark, os.path.join(root, "delta"))
-        it = IcebergTable(spark, os.path.join(root, "ice"))
-        pre_sid = json.load(open(marker))["pre_sid"]
+        return pre_sid
+
+    root, pre_sid = _gate_root(sf_dir, "lakehouse_stats_agg", build)
+    dt = DeltaProtocolTable(spark, os.path.join(root, "delta"))
+    it = IcebergTable(spark, os.path.join(root, "ice"))
 
     d = delta_metadata_aggregate(dt, cols=["k", "bal", "seg"])
     i_mm = iceberg_metadata_aggregate(
@@ -2264,7 +2179,6 @@ def lakehouse_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------- identity columns gate
-_IDENTITY_SPEC = "identity-gate-v2"
 
 _IDENTITY_ORACLE = """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -2292,14 +2206,11 @@ _IDENTITY_ORACLE = """
         "from the customer source.",
 )
 def delta_identity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-
     from ..sources.delta_log import DeltaProtocolTable
 
-    root, marker = _scratch(f"{_IDENTITY_SPEC}|{sf_dir}")
     k = F.col("k")
-    if not os.path.isfile(marker):
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build(root: str) -> None:
         cust = _gate_customers(spark, sf_dir).select("k", "bal")
         # batch boundary at 100 so BOTH batches are non-empty at
         # every test scale (sf0.001 has 150 customers)
@@ -2309,15 +2220,14 @@ def delta_identity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             identity={"id": {"start": 10, "step": 3}},
         )
         t.append(cust.filter((k > 100) & (k <= 300)))
-        with open(marker, "w") as f:
-            _json.dump({"spec": _IDENTITY_SPEC, "sf_dir": sf_dir}, f)
-    else:
-        t = DeltaProtocolTable(spark, root)
+
+    root, _ = _gate_root(sf_dir, "delta_identity_audit", build)
+    t = DeltaProtocolTable(spark, root)
 
     meta, _active = t._replay(t.latest_version())
     hwm = next(
         (f.get("metadata") or {}).get("delta.identity.highWaterMark")
-        for f in _json.loads(meta["schemaString"])["fields"]
+        for f in json.loads(meta["schemaString"])["fields"]
         if f["name"] == "id"
     )
     snap = t.snapshot()

@@ -212,6 +212,10 @@ def encode_png(pixels) -> bytes:
 
 
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
+# Pillow's decompression-bomb limit (256 MiB as RGB). Every composited
+# frame copies the logical-screen canvas, and a corrupt header may
+# declare up to 65535 x 65535 pixels (12.9 GB as RGB).
+_GIF_MAX_CANVAS_PIXELS = 1024 * 1024 * 1024 // 4 // 3
 
 
 def _gif_lzw_decode(data: bytes, min_code: int, expected: int) -> list[int]:
@@ -1121,6 +1125,11 @@ def _decode_gif_frames_checked(content, struct, np, max_frames):
     if content[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF")
     sw, sh, packed, bg, _ar = struct.unpack("<HHBBB", content[6:13])
+    if sw * sh > _GIF_MAX_CANVAS_PIXELS:
+        raise ValueError(
+            f"GIF logical screen {sw}x{sh} is past the "
+            "decompression-bomb limit"
+        )
     pos = 13
     gct = None
     if packed & 0x80:

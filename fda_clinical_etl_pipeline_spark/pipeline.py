@@ -424,7 +424,8 @@ class ClinicalPipeline:
         # multi-row append (per-file appends are per-write jobs)
         self.prov.register_batches_bulk(
             [
-                (make_batch_id(source_name, os.path.basename(fpath)),
+                (make_batch_id(source_name,
+                               unquote(os.path.basename(fpath))),
                  source_name, fpath, "", "COMPLETED", n_rows, path,
                  f"{n_bad} rows quarantined" if n_bad else None)
                 for fpath, n_rows, n_bad in per_file

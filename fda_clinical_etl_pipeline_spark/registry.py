@@ -5,6 +5,9 @@ query: a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (when
 SQL-expressible) an ANSI-SQL oracle string DuckDB can run over the same
 parquet tables. The driver hash-compares the two at sf=0.01; tests/
 test_oracle_parity.py runs the identical comparison locally at sf=0.001.
+This module holds registration and the verification-window rotation
+only; the plans the registered callables build are cached per session
+by ``cache.py``.
 
 Rules for parity (SURVEY.md §7.4 #6):
 - alias every computed column identically on both sides;
@@ -24,6 +27,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cache import cached_plan
+
 
 @dataclass(frozen=True)
 class RegisteredQuery:
@@ -35,60 +40,17 @@ class RegisteredQuery:
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
-# Plan cache — the DataFrame-API analog of a prepared statement.
-# Registered queries are deterministic (spark, sf_dir) -> DataFrame
-# BUILDERS; the DataFrame they return is an immutable logical plan that
-# re-executes freshly on every action, so re-invoking the builder only
-# re-pays Python-side expression construction (py4j round-trips:
-# measured 60 ms-0.8 s per query, ~5 s across the 84-query suite) for
-# a byte-identical plan. Keyed by (session, sf_dir); holding the
-# session object strongly also guarantees its id() is never recycled
-# into a false cache hit. Bounded twice: the newest
-# _PLAN_CACHE_SESSIONS sessions are retained (test suites create
-# sessions per run; a long-lived service has exactly one), and each
-# session keeps at most _PLAN_CACHE_PLANS plans, LRU-evicted. The
-# per-session bound is a long-session ROBUSTNESS guard (r15): a
-# retained DataFrame pins its analyzed plan AND every broadcast
-# relation its executions built on the JVM heap, so an unbounded cache
-# walked over the whole 182-query registry exhausts a default-1g
-# driver after ~175 queries (reproduced on the r14 tree too —
-# pre-existing). 64 covers every harness loop (bench 16, driver window
-# 50) while letting the JVM reclaim plans a sweep no longer touches.
-_PLAN_CACHE_SESSIONS = 4
-_PLAN_CACHE_PLANS = int(os.environ.get("SPARK_GRAFT_PLAN_CACHE", "64"))
-_plan_cache: dict[int, tuple[SparkSession, dict[tuple[str, str], DataFrame]]] = {}
-
-
-def _cached_build(name: str, fn, spark: SparkSession, sf_dir: str) -> DataFrame:
-    sid = id(spark)
-    entry = _plan_cache.get(sid)
-    if entry is None or entry[0] is not spark:
-        while len(_plan_cache) >= _PLAN_CACHE_SESSIONS:
-            _plan_cache.pop(next(iter(_plan_cache)))
-        entry = _plan_cache[sid] = (spark, {})
-    plans = entry[1]
-    key = (name, sf_dir)
-    df = plans.get(key)
-    if df is None:
-        while len(plans) >= max(_PLAN_CACHE_PLANS, 1):
-            plans.pop(next(iter(plans)))
-        df = plans[key] = fn(spark, sf_dir)
-    else:
-        # LRU: re-insert on hit so hot plans survive registry sweeps
-        plans.pop(key)
-        plans[key] = df
-    return df
-
 
 def register(name: str, oracle: str | None, doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame query. The
-    registered callable is wrapped with the plan cache; the decorated
-    function itself is returned unwrapped for direct/ad-hoc use."""
+    registered callable is wrapped with the session's plan cache
+    (cache.cached_plan); the decorated function itself is returned
+    unwrapped for direct/ad-hoc use."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         @functools.wraps(fn)
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return _cached_build(name, fn, spark, sf_dir)
+            return cached_plan(name, fn, spark, sf_dir)
 
         _REGISTRY[name] = RegisteredQuery(name, cached, oracle, doc)
         return fn

@@ -3,7 +3,7 @@ row-level change feed (insert/delete with ``_change_type`` /
 ``_commit_snapshot_id`` / ``_change_ordinal``) as a Structured
 Streaming input, the streaming twin of ``IcebergTable.changelog_scan``
 and the third leg of the CDC story (Delta: ``delta_cdf_stream``;
-Hudi: ``hudi_append_stream``).
+Hudi: ``hudi_changelog_stream``).
 
 Offsets are METADATA VERSIONS. Planning (driver, metadata-only) diffs
 each in-range snapshot's manifests against its parent — added files

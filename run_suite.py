@@ -3,8 +3,9 @@
 Plain ``pytest tests/`` runs ~41 min on this box: one Spark session
 (local[4]) executes ~1090 tests strictly sequentially, and most of
 the wall is many small Spark actions waiting on one JVM. The suite
-is file-independent (files share no state beyond the marker-guarded
-gate scratch tables keyed under ``tempfile.gettempdir()``), so this
+is file-independent (files share no state beyond the lakehouse gate
+scratch tables under ``tempfile.gettempdir()``, built once per gate,
+``sf_dir`` and digest of the code that writes them), so this
 runner partitions the test FILES into N shards, balanced by measured
 per-file wall (longest-processing-time greedy), and runs each shard
 as its own pytest subprocess with its own Spark JVM.

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import glob
 import os
+import re
+import shlex
 import subprocess
 import sys
 
@@ -17,17 +19,9 @@ _REPO_ROOT = os.path.dirname(_TESTS_DIR)
 
 
 def _is_full_suite_invocation(config) -> bool:
-    """True iff this pytest run targets the WHOLE tests directory with
-    no selection narrowing — the only shape the sharded takeover below
-    may intercept. Single files, node ids, -k/-m expressions,
-    --collect-only and cache replays (--lf/--ff) all run in-process."""
-    opt = config.option
-    if getattr(opt, "collectonly", False) or getattr(opt, "keyword", ""):
-        return False
-    if getattr(opt, "markexpr", "") or getattr(opt, "lf", False):
-        return False
-    if getattr(opt, "failedfirst", False):
-        return False
+    """True iff this pytest run targets the WHOLE tests directory — the
+    only shape the sharded takeover below may intercept. Options that
+    narrow the run are judged by ``takeover_args``."""
     args = config.args
     if not args:
         return False
@@ -36,6 +30,36 @@ def _is_full_suite_invocation(config) -> bool:
         if p not in (_TESTS_DIR, _REPO_ROOT):
             return False
     return True
+
+
+# options every shard honours, forwarded to run_suite.py after "--"
+_FORWARD_FLAGS = {"--continue-on-collection-errors"}
+_FORWARD_WITH_VALUE = ("-p", "-W", "-r")
+
+
+def takeover_args(args: list[str]) -> list[str] | None:
+    """The options of a full-suite invocation ``args`` to forward to the
+    shards, or None when the run must stay in-process. Verbosity is
+    dropped: run_suite.py sets it, because it parses the shard logs. Any
+    other option may change selection, stopping or reporting (-x,
+    --maxfail, --deselect, --ignore, --junitxml, -k, --lf, ...), which
+    one closing line over N shard processes would not honour."""
+    out: list[str] = []
+    it = iter(args)
+    for a in it:
+        if not a.startswith("-") or re.fullmatch(
+            r"-[qv]+|--quiet|--verbose", a
+        ):
+            continue
+        if a in _FORWARD_FLAGS:
+            out.append(a)
+        elif a in _FORWARD_WITH_VALUE:
+            out += [a, next(it, "")]
+        elif a[:2] in _FORWARD_WITH_VALUE:  # -pno:x, -Werror, -rA
+            out.append(a)
+        else:
+            return None
+    return out
 
 
 def pytest_configure(config):
@@ -47,20 +71,29 @@ def pytest_configure(config):
     driver's pytest timed out at ~38%). The suite is file-independent
     by construction (per-shard TMPDIR isolates gate scratch tables,
     Derby state and checkpoints), so `pytest tests/` transparently
-    re-executes as N parallel shard processes and exits with the
-    aggregate result (same 0-iff-all-green contract). Opt out with
-    SPARK_GRAFT_NO_SHARD=1 (run_suite's own children set
-    SPARK_GRAFT_SUITE_SHARD=1, which also disables the takeover)."""
+    re-executes as N parallel shard processes, with the options a shard
+    honours (``takeover_args``), and exits with the aggregate result
+    (same 0-iff-all-green contract). Any other option keeps the run
+    in-process. Opt out with SPARK_GRAFT_NO_SHARD=1 (run_suite's own
+    children set SPARK_GRAFT_SUITE_SHARD=1, which also disables the
+    takeover)."""
     if os.environ.get("SPARK_GRAFT_SUITE_SHARD") == "1":
         return
     if os.environ.get("SPARK_GRAFT_NO_SHARD") == "1":
         return
     if not _is_full_suite_invocation(config):
         return
+    forward = takeover_args([
+        *shlex.split(os.environ.get("PYTEST_ADDOPTS", "")),
+        *config.invocation_params.args,
+    ])
+    if forward is None:
+        return
     # inherit the process's real stdout/stderr fds: shard progress
     # streams live to whoever invoked pytest, bypassing capture
     rc = subprocess.call(
-        [sys.executable, os.path.join(_REPO_ROOT, "run_suite.py")],
+        [sys.executable, os.path.join(_REPO_ROOT, "run_suite.py"),
+         "--", *forward],
         cwd=_REPO_ROOT,
     )
     pytest.exit(

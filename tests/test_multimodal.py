@@ -483,6 +483,25 @@ def test_gif_animation_roundtrip_exact():
     assert len(decode_gif_frames(data, max_frames=2)) == 2
 
 
+def test_gif_frames_reject_oversized_canvas():
+    """A corrupt header's logical screen raises ValueError before the
+    canvas is allocated: 20000 x 20000 would be 1.2 GB as RGB, and random
+    bytes after the magic declare up to 65535 x 65535 (12.9 GB)."""
+    import struct
+
+    from fda_clinical_etl_pipeline_spark.operators.multimodal import (
+        decode_gif_frames,
+    )
+
+    data = b"GIF89a" + struct.pack("<HHBBB", 20000, 20000, 0, 0, 0) + b";"
+    with pytest.raises(ValueError, match="decompression-bomb"):
+        decode_gif_frames(data)
+    with pytest.raises(ValueError, match="no image data"):
+        decode_gif_frames(
+            b"GIF89a" + struct.pack("<HHBBB", 8, 8, 0, 0, 0) + b";"
+        )
+
+
 def test_gif_transparency_composites_previous_frame():
     """A transparent pixel must keep the PREVIOUS canvas content —
     the compositing rule real animations depend on."""

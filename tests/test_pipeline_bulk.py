@@ -18,6 +18,7 @@ from fda_clinical_etl_pipeline_spark.pipeline import (
     ClinicalPipeline,
     Zones,
 )
+from fda_clinical_etl_pipeline_spark.plans.provenance import make_batch_id
 
 
 @pytest.fixture()
@@ -191,6 +192,29 @@ def test_bulk_registers_empty_and_header_only_files(pipeline, tmp_path):
     assert all(r["status"] == "COMPLETED" for r in got.values())
     assert {r["raw_file_path"].rsplit("/", 1)[0] for r in got.values()} \
         == {"file://" + str(d)}
+
+
+def test_bulk_batch_ids_use_decoded_file_names(pipeline, tmp_path):
+    """A file name with a space gets the batch id run_batch gives it
+    (``make_batch_id`` over the plain name), for files with rows and
+    without; ``raw_file_path`` keeps its percent-encoded file: URI."""
+    d = _csv_dir(tmp_path, {
+        "a b.csv": CSV_HEADER + CSV_ROW,
+        "c d.csv": CSV_HEADER,
+    })
+    pipeline.run_bulk("hospital_a", str(d))
+    rows = pipeline.prov.batches().collect()
+
+    def prefix(batch_id: str) -> str:  # drop the timestamp suffix
+        return batch_id.rsplit("_", 1)[0]
+
+    assert sorted(prefix(r["batch_id"]) for r in rows) == [
+        prefix(make_batch_id("hospital_a", "a b.csv")),
+        prefix(make_batch_id("hospital_a", "c d.csv")),
+    ]
+    assert sorted(r["raw_file_path"] for r in rows) == [
+        (d / "a b.csv").as_uri(), (d / "c d.csv").as_uri(),
+    ]
 
 
 def test_lineage_steps_and_rules_on_bulk_only_lake(pipeline, tmp_path):

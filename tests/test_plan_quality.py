@@ -624,8 +624,9 @@ def test_clustered_probe_prunes_files(spark):
 
     # materialize the gate's scratch table at this SF
     QUERIES["delta_clustered_probe"].fn(spark, SF_DIR)
-    root, _marker = lakehouse._scratch(
-        f"{lakehouse._CLUSTER_SPEC}|{SF_DIR}"
+    root, _ = lakehouse._gate_root(
+        SF_DIR, "delta_clustered_probe",
+        lambda root: pytest.fail("the gate query built no table"),
     )
     t = DeltaProtocolTable(spark, root)
     for col, lo, hi in (("k", 1, 60), ("nat", 0, 3)):

@@ -160,10 +160,10 @@ def test_plan_cache_lru_bound(monkeypatch):
     the JVM heap, which exhausted a default-1g driver after ~175
     registry queries in one session. Eviction must rebuild correctly
     and hits must refresh recency."""
-    from fda_clinical_etl_pipeline_spark import registry as reg
+    from fda_clinical_etl_pipeline_spark import cache
 
-    monkeypatch.setattr(reg, "_PLAN_CACHE_PLANS", 3)
-    monkeypatch.setattr(reg, "_plan_cache", {})
+    monkeypatch.setattr(cache, "_PLAN_CACHE_PLANS", 3)
+    monkeypatch.setattr(cache, "_sessions", {})
     built = []
 
     class FakeSession:  # id()-keyed; never dereferenced as a session
@@ -178,13 +178,13 @@ def test_plan_cache_lru_bound(monkeypatch):
         return fn
 
     fns = {n: builder(n) for n in "abcd"}
-    a1 = reg._cached_build("a", fns["a"], s, "sf")
-    reg._cached_build("b", fns["b"], s, "sf")
-    reg._cached_build("c", fns["c"], s, "sf")
+    a1 = cache.cached_plan("a", fns["a"], s, "sf")
+    cache.cached_plan("b", fns["b"], s, "sf")
+    cache.cached_plan("c", fns["c"], s, "sf")
     # hit refreshes recency: 'a' moves to newest, 'b' becomes LRU
-    assert reg._cached_build("a", fns["a"], s, "sf") is a1
-    reg._cached_build("d", fns["d"], s, "sf")  # evicts 'b'
-    assert reg._cached_build("a", fns["a"], s, "sf") is a1  # survived
+    assert cache.cached_plan("a", fns["a"], s, "sf") is a1
+    cache.cached_plan("d", fns["d"], s, "sf")  # evicts 'b'
+    assert cache.cached_plan("a", fns["a"], s, "sf") is a1  # survived
     assert built.count("a") == 1
-    reg._cached_build("b", fns["b"], s, "sf")
+    cache.cached_plan("b", fns["b"], s, "sf")
     assert built.count("b") == 2  # was evicted, rebuilt

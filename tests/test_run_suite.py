@@ -65,3 +65,31 @@ def test_killed_shard_is_reported_lost(tmp_path, monkeypatch, capsys):
     assert "3 passed" in closing
     assert "3 not reported (lost shards 0)" in closing
     assert os.path.isfile(tmp_path / "suite_shard_1" / "pytest.log")
+
+
+def test_takeover_forwards_what_a_shard_honours():
+    from conftest import takeover_args
+
+    # the Tier-1 command: still sharded, its options reach every shard
+    assert takeover_args([
+        "tests/", "-q", "--continue-on-collection-errors",
+        "-p", "no:cacheprovider",
+    ]) == ["--continue-on-collection-errors", "-p", "no:cacheprovider"]
+    assert takeover_args(
+        ["tests", "-vv", "-W", "error::UserWarning", "-rA", "-pno:x"]
+    ) == ["-W", "error::UserWarning", "-rA", "-pno:x"]
+    assert takeover_args(["tests/"]) == []
+
+
+def test_takeover_stays_in_process_for_what_it_cannot_forward():
+    from conftest import takeover_args
+
+    for opts in (
+        ["-x"], ["-qx"], ["--exitfirst"], ["--maxfail=2"],
+        ["--maxfail", "2"], ["--deselect", "tests/test_a.py::t"],
+        ["--ignore=tests/test_a.py"], ["--junitxml", "r.xml"],
+        ["-k", "oracle"], ["--lf"], ["--collect-only"],
+    ):
+        assert takeover_args(
+            ["tests/", "-q", "-p", "no:cacheprovider", *opts]
+        ) is None, opts
