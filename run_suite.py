@@ -26,6 +26,11 @@ improves with use; unknown files default to 25 s. Usage:
 
     python run_suite.py [--shards N] [--] [extra pytest args]
 
+The extra pytest args reach every shard. ``--junitxml`` gets one file
+per shard, merged into the named file at the end; ``--basetemp DIR``
+becomes ``DIR/<i>`` per shard; ``--ignore``/``--ignore-glob`` drop
+files before they are partitioned.
+
 Sizing: the shard count fits both the cores and ``MemAvailable``. Each
 shard is budgeted its JVM heap (``SPARK_GRAFT_DRIVER_MEM``, default 2g,
 passed on to the shards) plus ~2 GB of JVM off-heap and Python workers
@@ -44,6 +49,7 @@ number of its tests that never reported a result.
 
 from __future__ import annotations
 
+import fnmatch
 import glob
 import json
 import os
@@ -53,6 +59,7 @@ import subprocess
 import sys
 import tempfile
 import time
+import xml.etree.ElementTree as ET
 
 WEIGHTS_FILE = os.path.join(
     os.path.dirname(os.path.abspath(__file__)),
@@ -187,6 +194,49 @@ def lost_shard_report(i: int, rc: int, log: str,
     )
 
 
+# options that name files: a shard gets its own file (--junitxml,
+# --basetemp) and the file list drops ignored files, because pytest
+# does not apply --ignore to files named on its command line
+_PATH_OPTS = ("--junitxml", "--junit-xml", "--basetemp", "--ignore",
+              "--ignore-glob")
+
+
+def split_path_opts(extra: list[str]) -> tuple[list[str],
+                                               dict[str, list[str]]]:
+    """``extra`` without the options of ``_PATH_OPTS``, and their values
+    by option (``--junit-xml`` counts as ``--junitxml``)."""
+    rest: list[str] = []
+    opts: dict[str, list[str]] = {}
+    it = iter(extra)
+    for a in it:
+        name, eq, value = a.partition("=")
+        if name in _PATH_OPTS:
+            name = "--junitxml" if name == "--junit-xml" else name
+            opts.setdefault(name, []).append(value if eq else next(it, ""))
+        else:
+            rest.append(a)
+    return rest, opts
+
+
+def ignored(path: str, opts: dict[str, list[str]]) -> bool:
+    real = os.path.realpath(path)
+    return any(
+        real == p or real.startswith(p + os.sep)
+        for p in map(os.path.realpath, opts.get("--ignore", []))
+    ) or any(fnmatch.fnmatch(path, g) for g in opts.get("--ignore-glob", []))
+
+
+def merge_junit(parts: list[str], out: str) -> None:
+    """One junit XML file at ``out`` holding the test suites of every
+    shard's file in ``parts`` (a lost shard writes none)."""
+    root = ET.Element("testsuites")
+    for part in parts:
+        if os.path.isfile(part):
+            root.extend(ET.parse(part).getroot().iter("testsuite"))
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
+    ET.ElementTree(root).write(out, encoding="utf-8", xml_declaration=True)
+
+
 def shard_cmd(shard: list[str], extra: list[str]) -> list[str]:
     return [
         sys.executable, "-m", "pytest",
@@ -213,10 +263,16 @@ def main(argv: list[str]) -> int:
             break
         else:
             extra.append(a)
+    extra, path_opts = split_path_opts(extra)
+    junit = path_opts.get("--junitxml", [None])[-1]
+    basetemp = path_opts.get("--basetemp", [None])[-1]
+    if basetemp:  # pytest makes each shard's directory, not its parent
+        os.makedirs(basetemp, exist_ok=True)
 
     here = os.path.dirname(os.path.abspath(__file__))
-    files = sorted(glob.glob(os.path.join(here, "tests",
-                                          "test_*.py")))
+    files = [f for f in sorted(glob.glob(os.path.join(here, "tests",
+                                                      "test_*.py")))
+             if not ignored(f, path_opts)]
     if not files:
         print("no test files found", file=sys.stderr)
         return 2
@@ -242,9 +298,15 @@ def main(argv: list[str]) -> int:
                    SPARK_GRAFT_SUITE_SHARD="1",
                    SPARK_GRAFT_DRIVER_MEM=heap, PYTHONUNBUFFERED="1")
         log_path = os.path.join(tmpdir, "pytest.log")
+        own = []
+        if junit:
+            own.append(f"--junitxml={os.path.join(tmpdir, 'junit.xml')}")
+        if basetemp:
+            own.append(f"--basetemp="
+                       f"{os.path.join(os.path.abspath(basetemp), str(i))}")
         with open(log_path, "w") as log_f:
             procs.append((i, shard, log_path,
-                          subprocess.Popen(shard_cmd(shard, extra),
+                          subprocess.Popen(shard_cmd(shard, extra + own),
                                            cwd=here, env=env,
                                            stdout=log_f,
                                            stderr=subprocess.STDOUT)))
@@ -269,7 +331,8 @@ def main(argv: list[str]) -> int:
             print(line)
             lost.append(i)
             unreported += missing
-        if rc != 0 or counts["failed"] or counts["errors"]:
+        # 5: every test of the shard deselected (-k, -m, --deselect)
+        if rc not in (0, 5) or counts["failed"] or counts["errors"]:
             ok = False
             tail = "\n".join(log.splitlines()[-30:])
             print(f"--- shard {i} log tail ---\n{tail}\n---")
@@ -282,6 +345,9 @@ def main(argv: list[str]) -> int:
                 new_weights.get(m.group(2), 0.0) + float(m.group(1))
             )
 
+    if junit:
+        merge_junit([os.path.join(root, f"suite_shard_{i}", "junit.xml")
+                     for i in range(len(shards))], junit)
     wall = time.monotonic() - t0
     print(f"TOTAL: {total} in {wall:.0f}s "
           f"({len(shards)} shards)")

@@ -32,33 +32,32 @@ def _is_full_suite_invocation(config) -> bool:
     return True
 
 
-# options every shard honours, forwarded to run_suite.py after "--"
-_FORWARD_FLAGS = {"--continue-on-collection-errors"}
-_FORWARD_WITH_VALUE = ("-p", "-W", "-r")
+# options that stop a run early or pick tests from an earlier run's
+# cache: one closing line over N shard processes cannot honour them
+_IN_PROCESS = re.compile(
+    r"-[qvsl]*x[qvslx]*|--exitfirst|--maxfail(=.*)?|--pdb|--trace"
+    r"|--lf|--last-failed|--ff|--failed-first|--nf|--new-first"
+    r"|--sw|--stepwise(-skip)?|--co|--collect-only|--collectonly"
+)
+_VERBOSITY = re.compile(r"-[qv]+|--quiet|--verbose|--verbosity=.*")
 
 
-def takeover_args(args: list[str]) -> list[str] | None:
-    """The options of a full-suite invocation ``args`` to forward to the
-    shards, or None when the run must stay in-process. Verbosity is
-    dropped: run_suite.py sets it, because it parses the shard logs. Any
-    other option may change selection, stopping or reporting (-x,
-    --maxfail, --deselect, --ignore, --junitxml, -k, --lf, ...), which
-    one closing line over N shard processes would not honour."""
+def takeover_args(args: list[str], paths: list[str]) -> list[str] | None:
+    """The options of a full-suite invocation ``args``, whose positional
+    arguments are ``paths``, to forward to every shard; None when the
+    run must stay in-process (``_IN_PROCESS``). Verbosity is dropped:
+    run_suite.py sets it, because it parses the shard logs. Everything
+    else reaches every shard, and run_suite.py applies the options that
+    name files per shard (--junitxml, --basetemp, --ignore)."""
     out: list[str] = []
     it = iter(args)
     for a in it:
-        if not a.startswith("-") or re.fullmatch(
-            r"-[qv]+|--quiet|--verbose", a
-        ):
-            continue
-        if a in _FORWARD_FLAGS:
-            out.append(a)
-        elif a in _FORWARD_WITH_VALUE:
-            out += [a, next(it, "")]
-        elif a[:2] in _FORWARD_WITH_VALUE:  # -pno:x, -Werror, -rA
-            out.append(a)
-        else:
+        if _IN_PROCESS.fullmatch(a):
             return None
+        if a == "--verbosity":
+            next(it, None)
+        elif a not in paths and not _VERBOSITY.fullmatch(a):
+            out.append(a)
     return out
 
 
@@ -71,10 +70,10 @@ def pytest_configure(config):
     driver's pytest timed out at ~38%). The suite is file-independent
     by construction (per-shard TMPDIR isolates gate scratch tables,
     Derby state and checkpoints), so `pytest tests/` transparently
-    re-executes as N parallel shard processes, with the options a shard
-    honours (``takeover_args``), and exits with the aggregate result
-    (same 0-iff-all-green contract). Any other option keeps the run
-    in-process. Opt out with SPARK_GRAFT_NO_SHARD=1 (run_suite's own
+    re-executes as N parallel shard processes, with the invocation's
+    options (``takeover_args``), and exits with the aggregate result
+    (same 0-iff-all-green contract). Options that stop the run early or
+    select from an earlier run's cache keep it in-process. Opt out with SPARK_GRAFT_NO_SHARD=1 (run_suite's own
     children set SPARK_GRAFT_SUITE_SHARD=1, which also disables the
     takeover)."""
     if os.environ.get("SPARK_GRAFT_SUITE_SHARD") == "1":
@@ -86,15 +85,17 @@ def pytest_configure(config):
     forward = takeover_args([
         *shlex.split(os.environ.get("PYTEST_ADDOPTS", "")),
         *config.invocation_params.args,
-    ])
+    ], list(config.args))
     if forward is None:
         return
-    # inherit the process's real stdout/stderr fds: shard progress
-    # streams live to whoever invoked pytest, bypassing capture
+    # PYTEST_ADDOPTS is forwarded above, so the shards must not read it
+    # again; relative paths in the options resolve where pytest was
+    # invoked. The shards' results print to this process's stdout.
+    env = {k: v for k, v in os.environ.items() if k != "PYTEST_ADDOPTS"}
     rc = subprocess.call(
         [sys.executable, os.path.join(_REPO_ROOT, "run_suite.py"),
          "--", *forward],
-        cwd=_REPO_ROOT,
+        cwd=str(config.invocation_params.dir), env=env,
     )
     pytest.exit(
         f"full suite ran sharded via run_suite.py (rc={rc})",

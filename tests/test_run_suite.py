@@ -1,14 +1,17 @@
-"""The sharded suite runner (run_suite.py): shard sizing from the
-machine, and a shard killed by a signal reported as lost rather than
-folded into a clean closing line. The shards here are fake processes;
-no Spark session starts."""
+"""The sharded suite runner (run_suite.py) and the takeover that starts
+it: shard sizing from the machine, a shard killed by a signal reported
+as lost rather than folded into a clean closing line, which options
+keep a run in-process, and options that name files applied per shard.
+The shards here are fake processes; no Spark session starts."""
 
 from __future__ import annotations
 
+import glob
 import importlib.util
 import os
 import sys
 import tempfile
+import xml.etree.ElementTree as ET
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
@@ -70,15 +73,29 @@ def test_killed_shard_is_reported_lost(tmp_path, monkeypatch, capsys):
 def test_takeover_forwards_what_a_shard_honours():
     from conftest import takeover_args
 
+    base = ["tests/", "-q", "--continue-on-collection-errors",
+            "-p", "no:cacheprovider"]
     # the Tier-1 command: still sharded, its options reach every shard
-    assert takeover_args([
-        "tests/", "-q", "--continue-on-collection-errors",
-        "-p", "no:cacheprovider",
-    ]) == ["--continue-on-collection-errors", "-p", "no:cacheprovider"]
+    assert takeover_args(base, ["tests/"]) == [
+        "--continue-on-collection-errors", "-p", "no:cacheprovider"]
     assert takeover_args(
-        ["tests", "-vv", "-W", "error::UserWarning", "-rA", "-pno:x"]
+        ["tests", "-vv", "-W", "error::UserWarning", "-rA", "-pno:x"],
+        ["tests"],
     ) == ["-W", "error::UserWarning", "-rA", "-pno:x"]
-    assert takeover_args(["tests/"]) == []
+    assert takeover_args(["tests/"], ["tests/"]) == []
+    # reporting, selection and file options shard too: run in-process
+    # the suite takes about 40 min
+    for opts in (
+        ["--junitxml", "r.xml"], ["--junit-xml=r.xml"], ["-rxX"],
+        ["--tb=short"], ["-o", "console_output_style=classic"],
+        ["--color=no"], ["-k", "oracle"], ["-m", "not slow"],
+        ["--deselect", "tests/test_a.py::t"], ["--ignore=tests/test_a.py"],
+        ["--basetemp", "/tmp/bt"], ["-s"], ["--durations=10"],
+    ):
+        assert takeover_args([*base, *opts], ["tests/"]) == [
+            *base[2:], *opts], opts
+    assert takeover_args([*base, "--verbosity", "2", "-v"], ["tests/"]) \
+        == base[2:]
 
 
 def test_takeover_stays_in_process_for_what_it_cannot_forward():
@@ -86,10 +103,56 @@ def test_takeover_stays_in_process_for_what_it_cannot_forward():
 
     for opts in (
         ["-x"], ["-qx"], ["--exitfirst"], ["--maxfail=2"],
-        ["--maxfail", "2"], ["--deselect", "tests/test_a.py::t"],
-        ["--ignore=tests/test_a.py"], ["--junitxml", "r.xml"],
-        ["-k", "oracle"], ["--lf"], ["--collect-only"],
+        ["--maxfail", "2"], ["--lf"], ["--ff"], ["--sw"],
+        ["--collect-only"], ["--co"], ["--pdb"],
     ):
         assert takeover_args(
-            ["tests/", "-q", "-p", "no:cacheprovider", *opts]
+            ["tests/", "-q", "-p", "no:cacheprovider", *opts], ["tests/"]
         ) is None, opts
+
+
+def test_path_options_apply_per_shard(tmp_path, monkeypatch):
+    extra, opts = run_suite.split_path_opts([
+        "-rA", "--junitxml", "r.xml", "--basetemp=bt",
+        "--ignore=tests/test_a.py", "--ignore-glob", "*_b.py", "--tb=no",
+    ])
+    assert extra == ["-rA", "--tb=no"]
+    assert opts == {"--junitxml": ["r.xml"], "--basetemp": ["bt"],
+                    "--ignore": ["tests/test_a.py"],
+                    "--ignore-glob": ["*_b.py"]}
+    monkeypatch.chdir(_ROOT)
+    assert run_suite.ignored(os.path.join(_ROOT, "tests", "test_a.py"), opts)
+    assert run_suite.ignored("tests/test_b.py", opts)
+    assert not run_suite.ignored("tests/test_c.py", opts)
+
+    calls = []
+
+    def shard_cmd(shard, extra):
+        calls.append((shard, extra))
+        out = next(a.split("=", 1)[1] for a in extra
+                   if a.startswith("--junitxml="))
+        return _fake(
+            f"open({out!r}, 'w').write('<testsuites><testsuite name=\"p\">"
+            f"<testcase name=\"t{len(calls)}\"/></testsuite></testsuites>')\n"
+            "print('===== 1 passed in 0.10s =====')\n"
+        )
+
+    monkeypatch.setattr(run_suite, "shard_cmd", shard_cmd)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    merged = tmp_path / "out" / "r.xml"
+    rc = run_suite.main([
+        "run_suite.py", "--shards", "2", "--", "-rA",
+        f"--junitxml={merged}", "--basetemp", str(tmp_path / "bt"),
+        "--ignore", "tests/test_run_suite.py",
+    ])
+
+    assert rc == 0 and len(calls) == 2
+    files = [f for shard, _ in calls for f in shard]
+    assert not any(f.endswith("test_run_suite.py") for f in files)
+    assert len(files) == len(glob.glob(os.path.join(_ROOT, "tests",
+                                                    "test_*.py"))) - 1
+    for i, (_, extra) in enumerate(calls):
+        assert extra[0] == "-rA"
+        assert f"--basetemp={tmp_path / 'bt' / str(i)}" in extra
+    names = sorted(c.get("name") for c in ET.parse(merged).iter("testcase"))
+    assert names == ["t1", "t2"]
